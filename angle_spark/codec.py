@@ -121,18 +121,28 @@ def decode_varints_concat_bounds(
 def decode_doc_deltas_concat(bufs: list[bytes]) -> np.ndarray:
     """Delta-decode MANY doc-delta streams in one pass (each stream's
     first delta is absolute — see encode_doc_deltas). Equals
-    np.concatenate([decode_doc_deltas(b) for b in bufs]) exactly: a
-    global cumsum over the flat deltas, minus the carry accumulated
-    before each stream's start."""
-    deltas, counts = decode_varints_concat(bufs)
+    np.concatenate([decode_doc_deltas(b) for b in bufs]) exactly."""
+    b = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    bounds = np.cumsum(np.fromiter((len(x) for x in bufs), dtype=np.int64, count=len(bufs)))
+    return decode_doc_deltas_concat_bounds(b, bounds)[0]
+
+
+def decode_doc_deltas_concat_bounds(
+    b: np.ndarray, byte_bounds: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`decode_doc_deltas_concat` over one pre-concatenated buffer
+    (the shape of :func:`decode_varints_concat_bounds`) -> (flat docIDs,
+    per-stream counts): a global cumsum over the flat deltas, minus the
+    carry accumulated before each stream's start."""
+    deltas, counts = decode_varints_concat_bounds(b, byte_bounds)
     cs = np.cumsum(deltas.astype(np.int64))
     if len(counts) > 1:
         starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
         offsets = np.zeros(len(counts), dtype=np.int64)
         nz = starts > 0
         offsets[nz] = cs[starts[nz] - 1]
-        return cs - np.repeat(offsets, counts)
-    return cs
+        return cs - np.repeat(offsets, counts), counts
+    return cs, counts
 
 
 def encode_doc_deltas(doc_ids: np.ndarray) -> bytes:

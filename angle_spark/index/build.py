@@ -6,16 +6,22 @@ SURVEY.md §7 "degrade gracefully, keep the API identical"). The reference's
 analog is checkpoint-per-N-steps with max-epoch resume
 (reference angle_emb/angle.py:933-944,1143-1148).
 
-Layout under <out_dir>/:
+Layout under <out_dir>/ (column types: index/schema.py, which every
+read passes — no read infers a schema):
     corpus_stats.json                     n_docs, avgdl, config
     segments/segment_id=K/*.parquet      encoded block rows, one dir per segment
     lineage/*.parquet                     (partition_id, doc_count, term_count,
                                            bytes, wall_ms, commit_ts,
                                            token_count) per segment commit
-    merged/bucket=B/*.parquet             final term-bucketed, salt-spread layout
+    merged/*.parquet                      final queryable layout, flat files:
+                                          rows hash-spread by (term, block
+                                          chunk), each file sorted by (term,
+                                          segment_id, block_in_seg) — see
+                                          _merged_layout
     delta_runs/run_<lo>_<hi>/*.parquet    LSM delta tiers from incremental
-                                          merges (only runs listed in meta
-                                          are live; see merge_index)
+                                          merges, same layout as merged/
+                                          (only runs listed in meta are
+                                          live; see merge_index)
     term_stats/*.parquet                  (term, df, cf)
 
 Resume: the work list is segment ids minus lineage's committed ids
@@ -38,16 +44,12 @@ from pyspark.sql import functions as F
 from angle_spark import fsio
 
 from angle_spark.codec import BLOCK_SIZE
+from angle_spark.index import schema
 from angle_spark.index.spimi import build_segments
 from angle_spark.index.stats import corpus_stats
 
-LINEAGE_SCHEMA = (
-    "partition_id long, doc_count long, term_count long, bytes long, "
-    "wall_ms long, commit_ts timestamp, token_count long"
-)
-
-# kept in IndexMeta for layout versioning; the merged layout is bucket-
-# hashed + sorted on (term, segment_id, block_in_seg) — see _merged_layout
+# the IndexMeta.n_buckets default: every meta carries the key, nothing
+# reads it — the merged layout is _merged_layout's (LAYOUT_BUCKETS below)
 N_BUCKETS = 64
 
 
@@ -145,10 +147,14 @@ def _write(df: DataFrame, path: str, fmt: str, mode: str, partition_by=None) -> 
         w.format(fmt).save(path)
 
 
-def _read_table(spark: SparkSession, path: str, fmt: str) -> DataFrame:
+def _read_table(spark: SparkSession, path: str, fmt: str, ddl: str) -> DataFrame:
+    """Read one index table with its declared schema (``ddl``, one of
+    index/schema.py's): no inference job, and a partition column takes
+    the declared type instead of the one discovery guesses."""
+    reader = spark.read.schema(ddl)
     if fmt == "parquet":
-        return spark.read.parquet(path)
-    return spark.read.format(fmt).load(path)
+        return reader.parquet(path)
+    return reader.format(fmt).load(path)
 
 
 def _lineage_dir(out_dir: str) -> str:
@@ -169,7 +175,7 @@ def committed_segments(
     try:
         return {
             r["partition_id"]
-            for r in _read_table(spark, path, sink_format)
+            for r in _read_table(spark, path, sink_format, schema.LINEAGE)
             .select("partition_id")
             .distinct()
             .collect()
@@ -306,7 +312,7 @@ def build_index(
         # would otherwise re-scan for, and the doc-count attach is a dict
         # lookup instead of a join stage.
         lin_rows = (
-            _read_table(spark, seg_dir, sink_format)
+            _read_table(spark, seg_dir, sink_format, schema.BLOCKS)
             .filter(F.col("segment_id").isin(batch))
             .groupBy("segment_id")
             .agg(
@@ -440,10 +446,12 @@ def compact_delta_runs(spark: SparkSession, out_dir: str, meta: IndexMeta) -> No
         _sweep_unreferenced_runs(spark, out_dir, meta)
         return
     fmt = meta.sink_format
-    combined = _read_table(spark, os.path.join(_runs_dir(out_dir), runs[0]), fmt)
+    combined = _read_table(
+        spark, os.path.join(_runs_dir(out_dir), runs[0]), fmt, schema.BLOCKS
+    )
     for r in runs[1:]:
         combined = combined.unionByName(
-            _read_table(spark, os.path.join(_runs_dir(out_dir), r), fmt)
+            _read_table(spark, os.path.join(_runs_dir(out_dir), r), fmt, schema.BLOCKS)
         )
     lo = min(int(r.split("_")[1]) for r in runs)
     hi = max(int(r.split("_")[2]) for r in runs)
@@ -515,7 +523,7 @@ def merge_index(
     fmt = meta.sink_format
     merged_path = os.path.join(out_dir, "merged")
     tstats_path = os.path.join(out_dir, "term_stats")
-    seg = _read_table(spark, os.path.join(out_dir, "segments"), fmt)
+    seg = _read_table(spark, os.path.join(out_dir, "segments"), fmt, schema.BLOCKS)
 
     if incremental and meta.merged_docs > 0:
         # delta = blocks past the watermark; segment_id lower bound lets
@@ -552,7 +560,7 @@ def merge_index(
         return
 
     _write(_merged_layout(seg), merged_path, fmt, "overwrite")
-    merged = _read_table(spark, merged_path, fmt)
+    merged = _read_table(spark, merged_path, fmt, schema.BLOCKS)
     # max-doc watermark: a fresh build already aggregated it from its
     # lineage passes (known_hi; -1 = complete-but-empty) — otherwise one
     # column-pruned scan of (last_doc)
@@ -591,27 +599,20 @@ def refresh_corpus_stats(spark: SparkSession, out_dir: str) -> IndexMeta:
     corpus_stats.json. Needed after streamed delta segments land, so BM25
     scores use corpus-true stats rather than build-time ones. Exact:
     avgdl = sum(all tf) / n_docs, both integers until the final division.
-    Legacy lineage written before token_count existed falls back to the
-    (column-pruned) segments sum_tf scan once; any refresh after a new
-    commit uses the fast path."""
+    Legacy lineage rows written before token_count existed read it as
+    NULL and force the (column-pruned) segments sum_tf scan."""
     stats_path = os.path.join(out_dir, "corpus_stats.json")
     meta = IndexMeta(**json.loads(fsio.read_text(spark, stats_path)))
     # every lineage row counts each doc/token exactly once (batch rows:
     # per segment; streamed rows: per micro-batch) -> plain sums
-    lin = _read_table(spark, _lineage_dir(out_dir), meta.sink_format)
+    lin = _read_table(spark, _lineage_dir(out_dir), meta.sink_format, schema.LINEAGE)
     row = lin.agg(
         F.sum("doc_count").alias("docs"),
-        *(
-            [
-                F.sum("token_count").alias("tokens"),
-                F.count(F.when(F.col("token_count").isNull(), 1)).alias("nulls"),
-            ]
-            if "token_count" in lin.columns
-            else []
-        ),
+        F.sum("token_count").alias("tokens"),
+        F.count(F.when(F.col("token_count").isNull(), 1)).alias("nulls"),
     ).collect()[0]
     n_docs = int(row["docs"])
-    if "token_count" in lin.columns and row["nulls"] == 0 and row["tokens"] is not None:
+    if row["nulls"] == 0 and row["tokens"] is not None:
         # lineage totals include since-purged docs; the cumulative purge
         # counters (index/deletes.py) subtract them back out exactly
         live_tokens = int(row["tokens"]) - meta.purged_tokens
@@ -619,7 +620,9 @@ def refresh_corpus_stats(spark: SparkSession, out_dir: str) -> IndexMeta:
         # forces the (column-pruned) block scan — never a silent
         # undercount. Purged postings are already absent from blocks, so
         # the counters must NOT be subtracted on this path.
-        seg = _read_table(spark, os.path.join(out_dir, "segments"), meta.sink_format)
+        seg = _read_table(
+            spark, os.path.join(out_dir, "segments"), meta.sink_format, schema.BLOCKS
+        )
         live_tokens = int(seg.agg(F.sum("sum_tf")).collect()[0][0] or 0)
     meta.n_docs = n_docs
     live_docs = n_docs - meta.purged_docs
@@ -650,18 +653,21 @@ def load_index(spark: SparkSession, out_dir: str):
     meta = IndexMeta(
         **json.loads(fsio.read_text(spark, os.path.join(out_dir, "corpus_stats.json")))
     )
-    merged = _read_table(spark, os.path.join(out_dir, "merged"), meta.sink_format)
-    tstats = _read_table(spark, os.path.join(out_dir, "term_stats"), meta.sink_format)
+    fmt = meta.sink_format
+    merged = _read_table(spark, os.path.join(out_dir, "merged"), fmt, schema.BLOCKS)
+    tstats = _read_table(
+        spark, os.path.join(out_dir, "term_stats"), fmt, schema.TERM_STATS
+    )
 
     deltas: list[DataFrame] = [
-        _read_table(spark, os.path.join(_runs_dir(out_dir), r), meta.sink_format)
+        _read_table(spark, os.path.join(_runs_dir(out_dir), r), fmt, schema.BLOCKS)
         for r in meta.delta_runs
     ]
     if 0 < meta.merged_docs < meta.n_docs:
         first_seg = meta.merged_docs // meta.segment_docs
         deltas.append(
             _read_table(
-                spark, os.path.join(out_dir, "segments"), meta.sink_format
+                spark, os.path.join(out_dir, "segments"), fmt, schema.BLOCKS
             ).filter(
                 (F.col("segment_id") >= F.lit(first_seg))
                 & (F.col("first_doc") >= F.lit(meta.merged_docs))
@@ -669,9 +675,9 @@ def load_index(spark: SparkSession, out_dir: str):
             )
         )
     if deltas:
-        delta = deltas[0].select(*merged.columns)
+        delta = deltas[0]
         for d in deltas[1:]:
-            delta = delta.unionByName(d.select(*merged.columns))
+            delta = delta.unionByName(d)
         merged = merged.unionByName(delta)
         # every delta block sits past stats_docs (runs are created only
         # after the last full merge; raw segments past merged_docs are

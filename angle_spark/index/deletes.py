@@ -13,10 +13,11 @@ documents for `deleteDocuments` + merge):
   (n_docs, avgdl, df) intentionally remain those of the full corpus
   until a purge — deleted docs still influence scores of live docs,
   exactly as in Lucene before a merge.
-- ``purge_deletes`` is the compaction: it decode-filter-re-encodes every
-  affected posting block (blocks without tombstoned docs pass through
-  byte-identical, no re-encode), rewrites ``segments/`` via an atomic
-  dir swap, full-merges, and updates the corpus stats to LIVE values —
+- ``purge_deletes`` is the compaction: it rewrites every affected
+  posting block without its tombstoned postings (blocks without
+  tombstoned docs pass through byte-identical, no decode), rewrites
+  ``segments/`` via an atomic dir swap, full-merges, and updates the
+  corpus stats to LIVE values —
   after a purge the index scores as if the deleted docs were never
   indexed. docIDs are NOT reassigned (the docID space keeps holes), so
   purge composes with streamed appends: the dense-assignment watermark
@@ -35,7 +36,15 @@ advisory live-doc counter — postings-level behavior stays correct).
 
 Scale shape: tombstones are never broadcast. The query side cogroups
 them with posting blocks on the shard key; the purge cogroups them on
-segment_id — each task sees only its own docID range's tombstones.
+segment_id — each task sees only its own docID range's tombstones. Both
+sides of that cogroup key on a long ``segment_id`` (index/schema.py says
+why the key types must match).
+
+The purge rewrite is one Arrow function per segment
+(``cogroup(...).applyInArrow`` over ``_purge_blocks``): the doc streams
+decode and re-encode in flat array passes, and the tf, dl and position
+streams of kept postings are copied byte for byte (``_kept_runs``) —
+positions are per-doc, so dropping a doc only drops its runs.
 """
 
 from __future__ import annotations
@@ -44,27 +53,15 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from angle_spark import fsio
-from angle_spark.codec import (
-    B,
-    K1,
-    decode_doc_deltas,
-    decode_tfs,
-    decode_varints,
-    encode_doc_deltas,
-    encode_tfs,
-    encode_varints,
-    encode_varints_with_lengths,
-)
+from angle_spark.codec import B, K1, encode_varints_with_lengths
+from angle_spark.index import schema
 from angle_spark.index.build import IndexMeta, _read_table, _write
-from angle_spark.index.spimi import SEGMENT_SCHEMA
-
-DELETES_SCHEMA = "doc_id long"
+from angle_spark.index.spimi import _pa_binary_from_stream
 
 
 def _deletes_dir(out_dir: str) -> str:
@@ -102,7 +99,11 @@ def _load_deletes_df(
     elif not fsio.exists(spark, path):
         return None
     try:
-        return _read_table(spark, path, meta.sink_format).select("doc_id").distinct()
+        return (
+            _read_table(spark, path, meta.sink_format, schema.DELETES)
+            .select("doc_id")
+            .distinct()
+        )
     except Exception:
         return None  # dir exists but holds no committed tombstones
 
@@ -174,143 +175,125 @@ def mask_postings(
     return ~hit
 
 
-def _purge_block_rows(pdf: pd.DataFrame, deleted: np.ndarray, avgdl: float) -> pd.DataFrame:
-    """One segment's block rows minus tombstoned postings. Blocks with no
-    tombstoned doc pass through unchanged (byte-identical); emptied
-    blocks are dropped; the rest re-encode with recomputed stats.
+def _kept_runs(data: np.ndarray, run_len: np.ndarray, keep: np.ndarray, kbounds: np.ndarray):
+    """The kept varint runs of one block stream family, byte for byte.
 
-    Vectorized across the segment's blocks (guide §4.2 — the round-5
-    version looped ``pdf.iloc[i]`` row-at-a-time, ~100us of pandas
-    overhead per block on top of each decode): the range reject is one
-    searchsorted over (first_doc, last_doc) arrays, all candidate blocks'
-    doc streams decode in ONE concat pass, membership is one flat
-    searchsorted, and the surviving postings re-encode in one varint pass
-    per stream, sliced back to blocks at the kept-count boundaries."""
-    if len(pdf) == 0 or deleted.size == 0:
-        return pdf
-    from angle_spark.codec import decode_doc_deltas_concat, decode_varints_concat
+    ``data`` is the concatenated stream of consecutive runs, run i being
+    ``run_len[i]`` varints (one run per posting: 1 for tf and dl, tf for
+    positions). Every run restarts absolute, so a kept run's bytes are
+    valid as they stand: its extent ends at the terminator byte (high
+    bit clear) of its last varint, and the output is one masked byte
+    copy — no decode, no re-encode. ``kbounds`` are the cumulative
+    kept-posting counts of the output blocks."""
+    ends = np.flatnonzero(data < 0x80)
+    if ends.size != int(run_len.sum()):
+        raise ValueError(
+            f"block stream holds {ends.size} varints, expected {int(run_len.sum())}"
+        )
+    run_bytes = np.diff(ends[np.cumsum(run_len) - 1] + 1, prepend=0)
+    kept_ends = np.concatenate(([0], np.cumsum(run_bytes[keep])))
+    return _pa_binary_from_stream(
+        data[np.repeat(keep, run_bytes)].tobytes(), kept_ends[kbounds]
+    )
 
-    first = pdf["first_doc"].to_numpy(dtype=np.int64)
-    last = pdf["last_doc"].to_numpy(dtype=np.int64)
-    # cheap range reject before any decode (same rule as the old per-row
-    # loop: a block whose [first_doc, last_doc] span holds no tombstone
-    # passes through byte-identical)
+
+def _purge_blocks(blocks, tomb, avgdl: float, positional: bool):
+    """applyInArrow cogroup body: one segment's block rows (Arrow table)
+    minus the postings of its tombstones (Arrow table with ``doc_id``).
+
+    Blocks whose docID span holds no tombstone pass through untouched
+    (one searchsorted range check before any decode), emptied blocks
+    are dropped, and the rest are rewritten with recomputed stats. The
+    whole segment moves in flat array passes — no per-block loop: the
+    candidate blocks' doc streams decode in one pass straight off the
+    Arrow buffers, membership is one flat searchsorted, the kept doc
+    deltas re-encode in one varint pass, and the tf, dl and position
+    streams are byte copies of the kept postings' runs (_kept_runs).
+    Block slices are offsets into one buffer per stream
+    (_pa_binary_from_stream), never per-block ``bytes`` objects."""
+    import pyarrow as pa
+
+    from angle_spark.codec import (
+        decode_doc_deltas_concat_bounds,
+        decode_varints_concat_bounds,
+    )
+    from angle_spark.index.resegment import _bin_col_view
+
+    # under spark.sql.execution.arrow.useLargeVarTypes=true Spark sends
+    # large_binary/large_string columns but checks the result against
+    # the 32-bit-offset types of schema.BLOCKS
+    narrow = {pa.large_binary(): pa.binary(), pa.large_string(): pa.string()}
+    out_schema = pa.schema([f.with_type(narrow.get(f.type, f.type)) for f in blocks.schema])
+    if blocks.num_rows == 0 or tomb.num_rows == 0:
+        return blocks.cast(out_schema)
+    deleted = np.unique(tomb.column("doc_id").to_numpy())
+    first = blocks.column("first_doc").to_numpy()
+    last = blocks.column("last_doc").to_numpy()
     lo = np.searchsorted(deleted, first)
     cand = (lo < deleted.size) & (deleted[np.minimum(lo, deleted.size - 1)] <= last)
     if not cand.any():
-        return pdf
+        return blocks.cast(out_schema)
     cidx = np.flatnonzero(cand)
-    counts = pdf["n_postings"].to_numpy(dtype=np.int64)[cidx]
-    docs_flat = decode_doc_deltas_concat([pdf["docs_bin"].iat[i] for i in cidx])
-    # flat membership: both sides sorted per block -> searchsorted
-    pos = np.searchsorted(deleted, docs_flat)
-    pos[pos == deleted.size] = 0
-    hit = deleted[pos] == docs_flat
-    bounds = np.concatenate(([0], np.cumsum(counts)))
-    ndel = np.add.reduceat(hit.astype(np.int64), bounds[:-1])
-    # candidates with no actual tombstoned posting pass through unchanged
-    untouched = ndel == 0
-    emptied = ndel == counts
-    partial = ~untouched & ~emptied
-
-    pass_mask = np.ones(len(pdf), dtype=bool)
-    pass_mask[cidx[emptied]] = False
-    pass_mask[cidx[partial]] = False
-    passthrough = pdf.iloc[np.flatnonzero(pass_mask)]
-    if not partial.any():
-        return passthrough.reset_index(drop=True)
-
-    pidx = cidx[partial]  # rows needing a re-encode
-    has_pos = "pos_bin" in pdf.columns
-    # flat kept mask restricted to partial blocks
-    keep_block = np.repeat(partial, counts)
-    keep_flat = (~hit)[keep_block]
-    pcounts = counts[partial]
-    pbounds = np.concatenate(([0], np.cumsum(pcounts)))
-    d_all = docs_flat[keep_block]
-    tf_all, _ = decode_varints_concat([pdf["tfs_bin"].iat[i] for i in pidx])
-    tf_all = tf_all.astype(np.int64) + 1
-    dl_all, _ = decode_varints_concat([pdf["dls_bin"].iat[i] for i in pidx])
-    dl_all = dl_all.astype(np.int64)
-
-    kept_counts = pcounts - ndel[partial]
-    kbounds = np.concatenate(([0], np.cumsum(kept_counts)))
-    d = d_all[keep_flat]
-    tf = tf_all[keep_flat]
-    dl = dl_all[keep_flat]
-    kb = kbounds[:-1]
-
-    # per-block stats in one reduceat pass each
-    tff = tf.astype(np.float64)
-    imp = tff * (K1 + 1.0) / (
-        tff + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl)
+    cblocks = blocks.take(cidx)
+    docs, counts = decode_doc_deltas_concat_bounds(
+        *_bin_col_view(cblocks.column("docs_bin"))
     )
-    new_first = d[kb]
-    new_last = d[kbounds[1:] - 1]
-    new_maxtf = np.maximum.reduceat(tf, kb)
-    new_mindl = np.minimum.reduceat(dl, kb)
-    new_sumtf = np.add.reduceat(tf, kb)
-    new_maximp = np.maximum.reduceat(imp, kb)
+    pos = np.searchsorted(deleted, docs)
+    pos[pos == deleted.size] = 0
+    hit = deleted[pos] == docs
+    ndel = np.add.reduceat(hit.astype(np.int64), np.cumsum(counts) - counts)
+    drop = np.zeros(blocks.num_rows, dtype=bool)
+    drop[cidx[ndel > 0]] = True
+    out = blocks.filter(pa.array(~drop)).cast(out_schema)
+    partial = (ndel > 0) & (ndel < counts)
+    if not partial.any():
+        return out
 
-    # ONE varint encode per stream; blocks are byte slices at the kept
-    # boundaries (delta restart absolute at each block start)
+    part = cblocks.take(np.flatnonzero(partial))
+    in_part = np.repeat(partial, counts)
+    keep = ~hit[in_part]
+    kept_counts = counts[partial] - ndel[partial]
+    kbounds = np.concatenate(([0], np.cumsum(kept_counts)))
+    kb = kbounds[:-1]
+    d = docs[in_part][keep]
+    tfs_data, tfs_ends = _bin_col_view(part.column("tfs_bin"))
+    dls_data, dls_ends = _bin_col_view(part.column("dls_bin"))
+    tf_all = decode_varints_concat_bounds(tfs_data, tfs_ends)[0].astype(np.int64) + 1
+    tf = tf_all[keep]
+    dl = decode_varints_concat_bounds(dls_data, dls_ends)[0].astype(np.int64)[keep]
+    tff = tf.astype(np.float64)
+    imp = tff * (K1 + 1.0) / (tff + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
+    # doc deltas restart absolute at every block start
     deltas = np.diff(d, prepend=np.int64(0))
     deltas[kb] = d[kb]
     docs_bytes, dlen = encode_varints_with_lengths(deltas.astype(np.uint64))
-    tfs_bytes, tlen = encode_varints_with_lengths(tf.astype(np.uint64) - np.uint64(1))
-    dls_bytes, llen = encode_varints_with_lengths(dl.astype(np.uint64))
-    doff = np.concatenate(([0], np.cumsum(dlen)))
-    toff = np.concatenate(([0], np.cumsum(tlen)))
-    loff = np.concatenate(([0], np.cumsum(llen)))
-    mv_d, mv_t, mv_l = memoryview(docs_bytes), memoryview(tfs_bytes), memoryview(dls_bytes)
-    docs_bin = [bytes(mv_d[doff[s]:doff[e]]) for s, e in zip(kb, kbounds[1:], strict=False)]
-    tfs_bin = [bytes(mv_t[toff[s]:toff[e]]) for s, e in zip(kb, kbounds[1:], strict=False)]
-    dls_bin = [bytes(mv_l[loff[s]:loff[e]]) for s, e in zip(kb, kbounds[1:], strict=False)]
-
-    pos_out = None
-    if has_pos:
-        # positions are within-doc, so kept postings' runs re-encode
-        # unchanged — only the dropped runs disappear from each stream.
-        # Rare path (positional purges only); per-partial-block decode.
-        from angle_spark.codec import decode_positions
-
-        pos_out = []
-        for j, i in enumerate(pidx):
-            pb = pdf["pos_bin"].iat[i]
-            if not pb:
-                pos_out.append(b"")
-                continue
-            blk_tf = tf_all[pbounds[j]:pbounds[j + 1]]
-            keep = keep_flat[pbounds[j]:pbounds[j + 1]]
-            flat, fb = decode_positions(pb, blk_tf)
-            kept_groups = [flat[fb[g]:fb[g + 1]] for g in np.flatnonzero(keep)]
-            pdeltas = np.concatenate(
-                [np.concatenate(([g[0]], np.diff(g))) for g in kept_groups]
-            )
-            pos_out.append(encode_varints(pdeltas.astype(np.uint64)))
-
-    recoded = {
-        "term": pdf["term"].to_numpy()[pidx],
-        "segment_id": pdf["segment_id"].to_numpy()[pidx],
-        "block_in_seg": pdf["block_in_seg"].to_numpy()[pidx],
-        "first_doc": new_first,
-        "last_doc": new_last,
-        "n_postings": kept_counts.astype(np.int32),
-        "max_tf": new_maxtf.astype(np.int32),
-        "min_dl": new_mindl.astype(np.int64),
-        "sum_tf": new_sumtf.astype(np.int64),
-        "max_impact": new_maximp,
-        "docs_bin": docs_bin,
-        "tfs_bin": tfs_bin,
-        "dls_bin": dls_bin,
+    ones = np.ones(len(keep), dtype=np.int64)
+    if positional:
+        pos_bin = _kept_runs(_bin_col_view(part.column("pos_bin"))[0], tf_all, keep, kbounds)
+    else:
+        pos_bin = _pa_binary_from_stream(b"", np.zeros(len(kbounds), dtype=np.int32))
+    rewritten = {
+        "term": part.column("term"),
+        "segment_id": part.column("segment_id"),
+        "block_in_seg": part.column("block_in_seg"),
+        "first_doc": pa.array(d[kb]),
+        "last_doc": pa.array(d[kbounds[1:] - 1]),
+        "n_postings": pa.array(kept_counts.astype(np.int32)),
+        "max_tf": pa.array(np.maximum.reduceat(tf, kb).astype(np.int32)),
+        "min_dl": pa.array(np.minimum.reduceat(dl, kb)),
+        "sum_tf": pa.array(np.add.reduceat(tf, kb)),
+        "max_impact": pa.array(np.maximum.reduceat(imp, kb)),
+        "docs_bin": _pa_binary_from_stream(
+            docs_bytes, np.concatenate(([0], np.cumsum(dlen)))[kbounds]
+        ),
+        "tfs_bin": _kept_runs(tfs_data, ones, keep, kbounds),
+        "dls_bin": _kept_runs(dls_data, ones, keep, kbounds),
+        "pos_bin": pos_bin,
     }
-    if has_pos:
-        recoded["pos_bin"] = pos_out
-    out = pd.concat(
-        [passthrough, pd.DataFrame(recoded)[list(pdf.columns)]],
-        ignore_index=True,
+    names = out.column_names
+    return pa.concat_tables(
+        [out, pa.table([rewritten[c] for c in names], names=names).cast(out_schema)]
     )
-    return out
 
 
 def _recover_purge_swap(spark: SparkSession, seg_dir: str) -> None:
@@ -339,10 +322,17 @@ def purge_deletes(spark: SparkSession, out_dir: str) -> IndexMeta:
     rewrite + full merge), the same class as the periodic full
     merge_index a maintained index runs anyway; batch deletes so purges
     piggyback on that cadence, exactly as Lucene purges deletes during
-    segment merges. Per-block decode is pruned (a block whose docID range
+    segment merges. The rewrite is an Arrow cogroup keyed on a long
+    segment_id on both sides, so every segment meets its tombstones in
+    one task. Per-block decode is pruned (a block whose docID range
     holds no tombstone passes through byte-identical via a searchsorted
     range check), so scattered vs clustered deletes change only the
-    re-encode volume, not the scan.
+    rewrite volume, not the scan. In a rewritten block only the doc
+    deltas re-encode; tf, dl and (positional indexes) position runs of
+    the kept postings are byte copies, so positions cost a masked copy,
+    not a decode and re-encode. Reads pass declared schemas (no
+    inference jobs), and the full merge takes its docID watermark from
+    the meta instead of a max(last_doc) scan.
 
     Crash-safe and idempotent: the doc/token accounting is journaled
     BEFORE the swap (a killed run can't recompute it afterwards — the
@@ -368,22 +358,20 @@ def purge_deletes(spark: SparkSession, out_dir: str) -> IndexMeta:
         # tombstones meet blocks only in their own segment — cogrouped on
         # segment_id, never broadcast (the tombstone set is unbounded
         # between compactions at 10^12 docs; each task sees only its own
-        # docID range's)
-        seg = _read_table(spark, seg_dir, meta.sink_format)
+        # docID range's). Both keys are long: segments/ reads with its
+        # declared schema (index/schema.py), never a discovered int
+        seg = _read_table(spark, seg_dir, meta.sink_format, schema.BLOCKS)
         dels_seg = dels.withColumn(
             "segment_id", (F.col("doc_id") / F.lit(meta.segment_docs)).cast("long")
         )
-
-        def fn(key, blocks: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
-            if len(blocks) == 0:
-                return blocks
-            deleted = np.sort(tomb["doc_id"].to_numpy(dtype=np.int64))
-            return _purge_block_rows(blocks, deleted, avgdl)
-
+        positional = meta.positional
         purged = (
             seg.groupby("segment_id")
             .cogroup(dels_seg.groupby("segment_id"))
-            .applyInPandas(fn, schema=SEGMENT_SCHEMA)
+            .applyInArrow(
+                lambda blocks, tomb: _purge_blocks(blocks, tomb, avgdl, positional),
+                schema=schema.BLOCKS,
+            )
         )
         # the cogroup already partitioned by segment_id — write straight
         # from its output (the old repartition(segment_id) re-shuffled
@@ -400,7 +388,7 @@ def purge_deletes(spark: SparkSession, out_dir: str) -> IndexMeta:
 
     def _tokens(path: str) -> int:
         return int(
-            _read_table(spark, path, meta.sink_format)
+            _read_table(spark, path, meta.sink_format, schema.BLOCKS)
             .agg(F.sum("sum_tf"))
             .collect()[0][0]
             or 0
@@ -411,12 +399,10 @@ def purge_deletes(spark: SparkSession, out_dir: str) -> IndexMeta:
         token_count per commit and the cumulative purge counter subtracts
         prior purges, so no segments/ scan is needed (round-3 verdict:
         purge ran two extra full sum_tf scans). None = legacy lineage
-        missing token_count -> caller falls back to the block scan."""
+        with a NULL token_count -> caller falls back to the block scan."""
         lin = _read_table(
-            spark, os.path.join(out_dir, "lineage"), meta.sink_format
+            spark, os.path.join(out_dir, "lineage"), meta.sink_format, schema.LINEAGE
         )
-        if "token_count" not in lin.columns:
-            return None
         row = lin.agg(
             F.sum("token_count").alias("tokens"),
             F.count(F.when(F.col("token_count").isNull(), 1)).alias("nulls"),
@@ -478,14 +464,9 @@ def purge_deletes(spark: SparkSession, out_dir: str) -> IndexMeta:
     # the tight range layout. NOTE merge_index persists meta itself, so
     # from here on the on-disk purged_docs is advanced — which is exactly
     # why the journal applies by base watermark, not by existence.
-    merge_index(spark, out_dir, meta, incremental=False)
-    # everything on disk is merged now; silence the delta-union path that
-    # merge_index's hi+1 watermark would otherwise leave open when the
-    # tail docs were purged
-    meta.merged_docs = meta.n_docs
-    meta.stats_docs = meta.n_docs
-    fsio.write_text(
-        spark, os.path.join(out_dir, "corpus_stats.json"), json.dumps(meta.__dict__)
-    )
+    # known_hi = n_docs - 1, not the merge's max(last_doc) scan: everything
+    # on disk is merged now, and a watermark below n_docs (tail docs
+    # purged) would leave the delta-union path open
+    merge_index(spark, out_dir, meta, incremental=False, known_hi=meta.n_docs - 1)
     fsio.delete(spark, journal_path)
     return meta

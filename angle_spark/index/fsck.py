@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from angle_spark import fsio
 from angle_spark.codec import decode_doc_deltas, decode_positions, decode_tfs, decode_varints
+from angle_spark.index import schema
 from angle_spark.index.build import IndexMeta, _read_table
 
 _VIOLATION_SCHEMA = "table string, check string, detail string"
@@ -120,7 +121,7 @@ def fsck_index(spark: SparkSession, out_dir: str) -> DataFrame:
     checks: list[DataFrame] = []
 
     def block_checks(path: str, table: str) -> DataFrame:
-        df = _read_table(spark, path, fmt)
+        df = _read_table(spark, path, fmt, schema.BLOCKS)
 
         def fn(it):
             for pdf in it:
@@ -142,23 +143,19 @@ def fsck_index(spark: SparkSession, out_dir: str) -> DataFrame:
     from angle_spark.index.build import load_index
 
     _, tstats, _ = load_index(spark, out_dir)
-    seg = _read_table(spark, os.path.join(out_dir, "segments"), fmt)
+    seg = _read_table(spark, os.path.join(out_dir, "segments"), fmt, schema.BLOCKS)
     truth = seg.groupBy("term").agg(
         F.sum("n_postings").alias("t_df"), F.sum("sum_tf").alias("t_cf")
     )
-    ts_cols = tstats.columns
-    ts = tstats.select(
-        "term",
-        F.col("df").alias("s_df"),
-        (F.col("cf") if "cf" in ts_cols else F.lit(None)).alias("s_cf"),
-    )
+    ts = tstats.select("term", F.col("df").alias("s_df"), F.col("cf").alias("s_cf"))
+    # a legacy term_stats without cf reads it as NULL: the cf comparison
+    # is then NULL, and only the df checks can flag the row
     cond = (
         F.col("s_df").isNull()
         | F.col("t_df").isNull()
         | (F.col("s_df") != F.col("t_df"))
+        | (F.col("s_cf") != F.col("t_cf"))
     )
-    if "cf" in ts_cols:
-        cond = cond | (F.col("s_cf") != F.col("t_cf"))
     stats_viol = (
         ts.join(truth, "term", "full_outer")
         .filter(cond)
@@ -179,7 +176,7 @@ def fsck_index(spark: SparkSession, out_dir: str) -> DataFrame:
 
     # meta/lineage level — a handful of scalars, checked driver-side
     scalar_rows: list[tuple[str, str, str]] = []
-    lin = _read_table(spark, os.path.join(out_dir, "lineage"), fmt)
+    lin = _read_table(spark, os.path.join(out_dir, "lineage"), fmt, schema.LINEAGE)
     lin_docs = int(lin.agg(F.sum("doc_count")).collect()[0][0] or 0)
     if lin_docs != meta.n_docs:
         scalar_rows.append(

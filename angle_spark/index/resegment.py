@@ -12,10 +12,11 @@ but the job reads O(index) instead of O(corpus) and never tokenizes:
 at transcript scale the index is the compressed minority of the bytes,
 and re-tokenization is the dominant build cost being skipped.
 
-Shape: one mapInPandas decode pass (each block splits into its new-
-segment slices — a block can span a boundary only when splitting to
-SMALLER segments), one shuffle keyed (new segment, term-hash bucket),
-one applyInPandas re-encode vectorized across the bucket's terms.
+Shape: one mapInArrow decode pass straight off the Arrow column buffers
+(_decode_slices_arrow; each block splits into its new-segment slices — a
+block can span a boundary only when splitting to SMALLER segments), one
+shuffle keyed (new segment, term-hash bucket), one applyInPandas
+re-encode vectorized across the bucket's terms.
 No driver collect, no corpus scan. Shrinking
 (fewer, larger segments) is the ES _shrink direction — fewer tasks per
 query batch, bigger per-task decode cache reuse; splitting (_split) is
@@ -50,8 +51,14 @@ from angle_spark.codec import (
     decode_varints,
     encode_varints_with_lengths,
 )
-from angle_spark.index.build import IndexMeta, load_index, _merged_layout, _write
-from angle_spark.index.spimi import SEGMENT_SCHEMA
+from angle_spark.index import schema
+from angle_spark.index.build import (
+    IndexMeta,
+    _merged_layout,
+    _read_table,
+    _write,
+    load_index,
+)
 
 _SLICE_SCHEMA = (
     "term string, segment_id long, first_doc long, "
@@ -62,9 +69,19 @@ _SLICE_SCHEMA = (
 def _bin_col_view(col) -> tuple[np.ndarray, np.ndarray]:
     """Arrow binary column -> (flat uint8 data, cumulative per-row end
     byte offsets), zero-copy — the input shape of
-    codec.decode_varints_concat_bounds."""
+    codec.decode_varints_concat_bounds. ``large_binary`` (what Spark
+    sends under spark.sql.execution.arrow.useLargeVarTypes=true) carries
+    int64 offsets; any other type raises instead of being misread."""
+    import pyarrow as pa
+
     col = col.combine_chunks() if hasattr(col, "combine_chunks") else col
-    off = np.frombuffer(col.buffers()[1], dtype=np.int32)[
+    if pa.types.is_large_binary(col.type):
+        off_type = np.int64
+    elif pa.types.is_binary(col.type):
+        off_type = np.int32
+    else:
+        raise TypeError(f"expected an Arrow binary column, got {col.type}")
+    off = np.frombuffer(col.buffers()[1], dtype=off_type)[
         col.offset : col.offset + len(col) + 1
     ].astype(np.int64)
     data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
@@ -82,7 +99,10 @@ def _decode_slices_arrow(it, segment_docs_new: int, positional: bool):
     buffer + offsets per stream (no per-slice ``bytes`` objects)."""
     import pyarrow as pa
 
-    from angle_spark.codec import decode_varints_concat_bounds
+    from angle_spark.codec import (
+        decode_doc_deltas_concat_bounds,
+        decode_varints_concat_bounds,
+    )
     from angle_spark.index.spimi import _pa_binary_from_stream
 
     out_fields = [
@@ -96,17 +116,9 @@ def _decode_slices_arrow(it, segment_docs_new: int, positional: bool):
             continue
         names = batch.schema.names
         col = {n: batch.column(names.index(n)) for n in names}
-        ddeltas, dcounts = decode_varints_concat_bounds(
+        docs, dcounts = decode_doc_deltas_concat_bounds(
             *_bin_col_view(col["docs_bin"])
         )
-        # un-carry the per-block delta streams (absolute restart at each
-        # block start) — decode_doc_deltas_concat's math over the batch
-        cs = np.cumsum(ddeltas.astype(np.int64))
-        bstarts = np.concatenate(([0], np.cumsum(dcounts)[:-1]))
-        carry = np.zeros(len(dcounts), dtype=np.int64)
-        nz = bstarts > 0
-        carry[nz] = cs[bstarts[nz] - 1]
-        docs = cs - np.repeat(carry, dcounts)
         n = len(docs)
         if n == 0:
             continue
@@ -333,7 +345,7 @@ def resegment_index(
         lambda key, pdf: _encode_bucket(
             key, pdf, meta.avgdl, meta.block_size, positional
         ),
-        schema=SEGMENT_SCHEMA,
+        schema=schema.BLOCKS,
     )
 
     fsio.mkdirs(spark, dst_dir)
@@ -348,7 +360,9 @@ def resegment_index(
         fmt,
         "overwrite",
     )
-    new_merged = spark.read.format(fmt).load(os.path.join(dst_dir, "merged"))
+    new_merged = _read_table(
+        spark, os.path.join(dst_dir, "merged"), fmt, schema.BLOCKS
+    )
     # df/cf are segmentation-invariant — recomputed from the written
     # blocks as the cheap self-check the merge path also uses
     _write(

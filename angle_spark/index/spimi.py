@@ -39,13 +39,7 @@ from angle_spark.codec import (
     K1,
     encode_varints_with_lengths,
 )
-
-SEGMENT_SCHEMA = (
-    "term string, segment_id long, block_in_seg int, first_doc long, "
-    "last_doc long, n_postings int, max_tf int, min_dl long, sum_tf long, "
-    "max_impact double, docs_bin binary, tfs_bin binary, dls_bin binary, "
-    "pos_bin binary"
-)
+from angle_spark.index import schema
 
 DEFAULT_SEGMENT_DOCS = 100_000
 
@@ -358,7 +352,7 @@ def build_segments(
         "dl",
         (F.col("doc_id") / F.lit(segment_docs)).cast("long").alias("segment_id"),
     )
-    return with_seg.groupBy("segment_id").applyInArrow(fn, schema=SEGMENT_SCHEMA)
+    return with_seg.groupBy("segment_id").applyInArrow(fn, schema=schema.BLOCKS)
 
 
 def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from angle_spark import fsio
+from angle_spark.index import schema
 from angle_spark.index.build import (
     IndexMeta,
     _read_table,
@@ -112,7 +113,7 @@ def _sweep_uncommitted_segments(
         if sid > boundary or meta.n_docs % meta.segment_docs == 0:
             fsio.delete(spark, child)
             continue
-        df = spark.read.parquet(child)
+        df = _read_table(spark, child, meta.sink_format, schema.SEGMENT_FILES)
         if df.filter(F.col("first_doc") >= meta.n_docs).limit(1).count() == 0:
             continue
         keep = df.filter(F.col("first_doc") < meta.n_docs)
@@ -134,7 +135,7 @@ def recover_update(spark: SparkSession, out_dir: str) -> int:
         return 0
     j = json.loads(fsio.read_text(spark, journal_path))
     hits = _read_table(
-        spark, os.path.join(_ubq_dir(out_dir), "hits"), j["fmt"]
+        spark, os.path.join(_ubq_dir(out_dir), "hits"), j["fmt"], schema.DELETES
     ).select("doc_id")
     return _finish_update(
         spark, out_dir, hits, int(j["n0"]), int(j["n_new"]),
@@ -161,13 +162,15 @@ def _finish_update(
     # tombstones remain. Lineage still at n0 means any blocks above the
     # watermark are a half-append to sweep and redo.
     lineage_docs = int(
-        _read_table(spark, _lineage_dir(out_dir), meta.sink_format)
+        _read_table(spark, _lineage_dir(out_dir), meta.sink_format, schema.LINEAGE)
         .agg(F.sum("doc_count"))
         .collect()[0][0]
     )
     if lineage_docs == n0:
         _sweep_uncommitted_segments(spark, out_dir, meta)
-        source_docs = _read_table(spark, source_path, meta.sink_format)
+        # the caller's forward table, not an index table: its columns are
+        # whatever ``transform`` reads, so this read keeps inference
+        source_docs = spark.read.format(meta.sink_format).load(source_path)
         reps = (
             source_docs.join(hits, "doc_id")
             .select(
@@ -245,7 +248,9 @@ def update_by_query(
         fsio.delete(spark, ubq)  # journal-less debris from a failed start
     hits_path = os.path.join(ubq, "hits")
     _write(hits, hits_path, meta.sink_format, "overwrite")
-    hits = _read_table(spark, hits_path, meta.sink_format).select("doc_id")
+    hits = _read_table(spark, hits_path, meta.sink_format, schema.DELETES).select(
+        "doc_id"
+    )
     n_new = hits.count()
     if n_new == 0:
         fsio.delete(spark, ubq)

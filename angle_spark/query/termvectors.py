@@ -6,7 +6,7 @@ FROM THE INDEX, not by re-tokenizing source text.
 
 The inverted index has no per-doc forward file, so the read is an
 "uninvert" scan (the purge/fsck shape): every block row carries its
-docID span (first_doc, last_doc — index/spimi.py SEGMENT_SCHEMA), so a
+docID span (first_doc, last_doc — index/schema.py BLOCKS), so a
 containment predicate keeps only blocks that can hold a requested doc.
 merged/ is term-range partitioned (query-major), so this is a PUSHED
 data predicate (parquet row-group stats), not partition pruning — the

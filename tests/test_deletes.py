@@ -278,9 +278,9 @@ def test_purge_reads_segments_once(spark, docs, tmp_path_factory, monkeypatch):
     real = del_mod._read_table
     reads: list[str] = []
 
-    def spy(spark_, path, fmt):
+    def spy(spark_, path, fmt, ddl):
         reads.append(path)
-        return real(spark_, path, fmt)
+        return real(spark_, path, fmt, ddl)
 
     monkeypatch.setattr(del_mod, "_read_table", spy)
     meta = purge_deletes(spark, out)
@@ -290,3 +290,129 @@ def test_purge_reads_segments_once(spark, docs, tmp_path_factory, monkeypatch):
     # and the accounting still lands on the exact live values
     after = refresh_corpus_stats(spark, out)
     assert after.avgdl == meta.avgdl and after.purged_tokens == meta.purged_tokens
+
+
+def _live_truth(docs):
+    """(live postings, purged tokens, live tokens, live docs) of the
+    DEL_MOD tombstone set, straight from the tokenized docs."""
+    pdf = docs.toPandas()
+    live = pdf["doc_id"] % DEL_MOD != 0
+    postings = int(sum(len(set(t)) for t in pdf.loc[live, "tokens"]))
+    purged_tokens = int(pdf.loc[~live, "dl"].sum())
+    return postings, purged_tokens, int(pdf.loc[live, "dl"].sum()), int(live.sum())
+
+
+@pytest.mark.parametrize("large_var_types", [False, True])
+def test_purge_meets_every_segment_uncoalesced(
+    spark, docs, tmp_path_factory, large_var_types
+):
+    """The purge cogroup must key segments and tombstones on the SAME
+    type. With AQE coalescing off and 16 shuffle partitions, a
+    partition-discovered int segment_id and a computed long one hash to
+    different partitions, and most segments never meet their
+    tombstones (default settings hide it: AQE coalesces the tiny
+    tombstone side into one partition). Also run under Arrow large var
+    types, where the purge's buffer views read int64 offsets."""
+    from angle_spark.index.build import load_index
+
+    out = str(tmp_path_factory.mktemp(f"purge_keys_{large_var_types}") / "idx")
+    build_index(spark, docs, out, segment_docs=SEGMENT_DOCS, block_size=BLOCK, positional=True)
+    delete_docs(spark, out, docs.select("doc_id").filter(f"doc_id % {DEL_MOD} = 0"))
+    _, _, before = load_index(spark, out)
+    assert before.n_docs > 2 * SEGMENT_DOCS  # at least 3 segments
+    confs = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "16",
+        "spark.sql.execution.arrow.useLargeVarTypes": str(large_var_types).lower(),
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        meta = purge_deletes(spark, out)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    postings, purged_tokens, live_tokens, live_docs = _live_truth(docs)
+    for sub in ("segments", "merged"):
+        got = spark.read.parquet(os.path.join(out, sub)).agg({"n_postings": "sum"})
+        assert got.collect()[0][0] == postings, sub
+    assert meta.purged_tokens == purged_tokens
+    assert meta.live_docs == live_docs
+    assert meta.avgdl == live_tokens / live_docs
+
+
+def test_index_reads_submit_no_jobs(spark, masked_dir):
+    """Every index read passes its declared schema (index/schema.py):
+    opening an index or its tombstones plans reads without submitting a
+    single Spark job (schema inference would scan a footer per read),
+    and segment_id is a long on every block table."""
+    from pyspark.sql.types import LongType
+
+    from angle_spark.index import schema
+    from angle_spark.index.build import _read_table
+
+    tables = {
+        "segments": schema.BLOCKS,
+        "merged": schema.BLOCKS,
+        "term_stats": schema.TERM_STATS,
+        "lineage": schema.LINEAGE,
+        "deletes": schema.DELETES,
+    }
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    merged, _, _ = load_index(spark, masked_dir)
+    assert load_deletes(spark, masked_dir) is not None
+    frames = {
+        name: _read_table(spark, os.path.join(masked_dir, name), "parquet", ddl)
+        for name, ddl in tables.items()
+    }
+    assert sched.nextJobId() - j0 == 0
+    assert isinstance(merged.schema["segment_id"].dataType, LongType)
+    for name in ("segments", "merged"):
+        assert isinstance(frames[name].schema["segment_id"].dataType, LongType)
+    assert sched.nextJobId() - j0 == 0
+
+
+def test_legacy_lineage_without_token_count_falls_back(
+    spark, docs, tmp_path_factory, monkeypatch
+):
+    """A lineage file written before token_count existed reads the
+    column as NULL: the stats refresh and the purge's pre-purge token
+    total must fall back to the segments sum_tf scan and stay exact."""
+    import shutil
+
+    import angle_spark.index.build as build_mod
+
+    out = _build(spark, docs, tmp_path_factory, "legacy_lineage")
+    lin_dir = os.path.join(out, "lineage")
+    lin = spark.read.parquet(lin_dir).drop("commit_ts").toPandas()
+    shutil.rmtree(lin_dir)
+    legacy = lin.iloc[:1].drop(columns="token_count")
+    spark.createDataFrame(legacy).write.parquet(lin_dir)
+    spark.createDataFrame(lin.iloc[1:]).write.mode("append").parquet(lin_dir)
+
+    seg_dir = os.path.join(out, "segments")
+    reads: list[str] = []
+    real = build_mod._read_table
+
+    def spy(spark_, path, fmt, ddl):
+        reads.append(path)
+        return real(spark_, path, fmt, ddl)
+
+    monkeypatch.setattr(build_mod, "_read_table", spy)
+    meta = refresh_corpus_stats(spark, out)
+    monkeypatch.undo()
+    assert seg_dir in reads  # the fallback scan ran
+    pdf = docs.toPandas()
+    assert meta.avgdl == int(pdf["dl"].sum()) / len(pdf)
+
+    delete_docs(spark, out, docs.select("doc_id").filter(f"doc_id % {DEL_MOD} = 0"))
+    meta = purge_deletes(spark, out)
+    _, purged_tokens, live_tokens, live_docs = _live_truth(docs)
+    assert meta.purged_tokens == purged_tokens
+    assert meta.avgdl == live_tokens / live_docs

@@ -45,6 +45,6 @@ def test_sink_format_seam(spark, tmp_path):
 
     df = spark.range(5).selectExpr("id AS x")
     _write(df, str(tmp_path / "t"), "json", "overwrite")
-    assert _read_table(spark, str(tmp_path / "t"), "json").count() == 5
+    assert _read_table(spark, str(tmp_path / "t"), "json", "x long").count() == 5
     with pytest.raises(Exception, match="(?i)iceberg|data.?source|failed to find"):
         _write(df, str(tmp_path / "t2"), "iceberg", "overwrite")

@@ -4,8 +4,10 @@ value-identical to the (slower) reference renditions they replaced.
 - _segment_blocks_arrow (index/spimi.py) vs _segment_blocks: the Arrow
   encoder is the build hot path; the pandas rendition stays as the
   cross-checked reference.
-- _purge_block_rows (index/deletes.py): the vectorized purge vs a
+- _purge_blocks (index/deletes.py): the Arrow purge rewrite vs a
   straight re-derivation from decoded postings.
+- _bin_col_view (index/resegment.py): the zero-copy buffer view reads
+  both Arrow binary offset widths and refuses anything else.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from angle_spark.codec import (
     decode_tfs,
     decode_varints,
 )
-from angle_spark.index.deletes import _purge_block_rows
+from angle_spark.index.deletes import _purge_blocks
 from angle_spark.index.spimi import _segment_blocks, _segment_blocks_arrow
 
 
@@ -76,7 +78,12 @@ def test_purge_block_rows_matches_reference():
     deleted = np.sort(
         rng.choice(np.arange(50, 450, dtype=np.int64), size=40, replace=False)
     )
-    out = _purge_block_rows(blocks.copy(), deleted, 14.0)
+    out = _purge_blocks(
+        pa.Table.from_pandas(blocks, preserve_index=False),
+        pa.table({"doc_id": deleted}),
+        14.0,
+        positional=True,
+    ).to_pandas()
 
     # reference: re-derive every surviving block row from decoded postings
     ref_rows = 0
@@ -125,9 +132,34 @@ def test_purge_block_rows_no_candidates_is_identity():
     pdf = _rand_docs(rng, 100)
     blocks = _segment_blocks(pdf, 10.0, 16)
     deleted = np.array([5000, 6000], dtype=np.int64)  # outside doc range
-    out = _purge_block_rows(blocks.copy(), deleted, 10.0)
+    out = _purge_blocks(
+        pa.Table.from_pandas(blocks, preserve_index=False),
+        pa.table({"doc_id": deleted}),
+        10.0,
+        positional=False,
+    ).to_pandas()
     assert len(out) == len(blocks)
     assert list(out["docs_bin"]) == list(blocks["docs_bin"])
+
+
+@pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()])
+def test_bin_col_view_reads_both_offset_widths(typ):
+    from angle_spark.index.resegment import _bin_col_view
+
+    vals = [b"\x01\x02", b"", b"\x83\x01", b"\x07"]
+    col = pa.chunked_array([pa.array(vals[:2], type=typ), pa.array(vals[2:], type=typ)])
+    # a sliced array starts mid-buffer: offsets must be read from there
+    for arr, want in ((col, vals), (pa.array(vals, type=typ).slice(1), vals[1:])):
+        data, ends = _bin_col_view(arr)
+        assert data.tobytes() == b"".join(want)
+        assert list(ends) == list(np.cumsum([len(v) for v in want]))
+
+
+def test_bin_col_view_refuses_non_binary():
+    from angle_spark.index.resegment import _bin_col_view
+
+    with pytest.raises(TypeError, match="binary"):
+        _bin_col_view(pa.array(["ab", "c"], type=pa.large_string()))
 
 
 def test_rebuild_segment_matches_rowwise_reference():
