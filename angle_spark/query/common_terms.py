@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 from angle_spark.index.build import IndexMeta
 from angle_spark.index.stats import idf_value
 from angle_spark.query.wand import (
-    SHARD_SEGMENTS,
     _shard_and_rank,
     query_term_stats,
 )
@@ -69,7 +68,6 @@ def common_terms_topk(
     meta: IndexMeta,
     queries,
     cutoff: float = 0.01,
-    shard_segments: int | None = SHARD_SEGMENTS,
     deletes: DataFrame | None = None,
     doc_filter: DataFrame | None = None,
 ) -> DataFrame:
@@ -141,7 +139,6 @@ def common_terms_topk(
         sorted(cand),
         False,
         False,
-        shard_segments,
         deletes,
         "boolean",
         0,

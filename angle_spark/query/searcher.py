@@ -74,6 +74,17 @@ class Searcher:
         self._merged: DataFrame | None = None
         self.refresh()
 
+    def _session(self, kwargs: dict | None = None) -> tuple:
+        """-> (spark, blocks, term stats, meta): the leading arguments of
+        every engine call this session serves. Raises once the session
+        is closed; the session's tombstones become the ``deletes``
+        default of ``kwargs`` (a caller's explicit ``deletes`` wins)."""
+        if self._merged is None:
+            raise RuntimeError("Searcher is closed")
+        if kwargs is not None:
+            kwargs.setdefault("deletes", self.deletes)
+        return self.spark, self._merged, self._tstats, self.meta
+
     def refresh(self) -> "Searcher":
         """(Re)open the current index generation: refreshed corpus stats,
         current deltas unioned in, current tombstones. Any previously
@@ -161,8 +172,7 @@ class Searcher:
         columns) — when given, results come back hydrated with the
         original turn metadata via a broadcast join of the small result
         side (see ``hydrate``); the corpus is never shuffled."""
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
+        session = self._session()
         if synonyms is not None:
             # expansion rewrites the query's token BAG, which is only
             # meaningful for bag-of-words modes; structured query text
@@ -177,10 +187,7 @@ class Searcher:
                 queries = self.spark.createDataFrame(queries)
             queries = expand_queries(queries, synonyms)
         out = wand_topk(
-            self.spark,
-            self._merged,
-            self._tstats,
-            self.meta,
+            *session,
             queries,
             prune=prune,
             mode=mode,
@@ -206,12 +213,7 @@ class Searcher:
         the session's tombstones apply."""
         from angle_spark.query.wand import count_matches
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return count_matches(
-            self.spark, self._merged, self._tstats, self.meta, queries, **kwargs
-        )
+        return count_matches(*self._session(kwargs), queries, **kwargs)
 
     def aggregate(self, queries, values, **kwargs) -> DataFrame:
         """-> (query_id, n_docs, n_values, sum, min, max, avg): metric
@@ -220,13 +222,7 @@ class Searcher:
         session's tombstones apply."""
         from angle_spark.query.wand import aggregate_matches
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return aggregate_matches(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            values, **kwargs,
-        )
+        return aggregate_matches(*self._session(kwargs), queries, values, **kwargs)
 
     def percentiles(self, queries, values, percentiles=(0.25, 0.5, 0.75),
                     **kwargs) -> DataFrame:
@@ -236,12 +232,8 @@ class Searcher:
         the t-digest-style sketch); the session's tombstones apply."""
         from angle_spark.query.wand import percentile_matches
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
         return percentile_matches(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            values, percentiles=percentiles, **kwargs,
+            *self._session(kwargs), queries, values, percentiles=percentiles, **kwargs,
         )
 
     def matched_ids(self, queries, **kwargs) -> DataFrame:
@@ -250,13 +242,7 @@ class Searcher:
         session's tombstones apply."""
         from angle_spark.query.wand import matched_ids
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return matched_ids(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            **kwargs,
-        )
+        return matched_ids(*self._session(kwargs), queries, **kwargs)
 
     def matrix_stats(self, queries, values, **kwargs) -> DataFrame:
         """-> pairwise covariance/correlation of numeric doc fields over
@@ -264,13 +250,7 @@ class Searcher:
         wand.matrix_stats_matches); the session's tombstones apply."""
         from angle_spark.query.wand import matrix_stats_matches
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return matrix_stats_matches(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            values, **kwargs,
-        )
+        return matrix_stats_matches(*self._session(kwargs), queries, values, **kwargs)
 
     def boosting(self, queries, negative_boost=0.5, **kwargs) -> DataFrame:
         """-> (query_id, rank, doc_id, score): ES boosting query — rank
@@ -280,12 +260,8 @@ class Searcher:
         tombstones apply to both phases."""
         from angle_spark.query.boosting import boosting_topk
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
         return boosting_topk(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            negative_boost=negative_boost, **kwargs,
+            *self._session(kwargs), queries, negative_boost=negative_boost, **kwargs,
         )
 
     def constant_score(self, queries, boost=1.0, **kwargs) -> DataFrame:
@@ -294,12 +270,8 @@ class Searcher:
         (query/boosting.py); the session's tombstones apply."""
         from angle_spark.query.boosting import constant_score_topk
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
         return constant_score_topk(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            boost=boost, **kwargs,
+            *self._session(kwargs), queries, boost=boost, **kwargs,
         )
 
     def weighted_avg(self, queries, values, **kwargs) -> DataFrame:
@@ -309,13 +281,7 @@ class Searcher:
         frame; the session's tombstones apply."""
         from angle_spark.query.wand import weighted_avg_matches
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return weighted_avg_matches(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            values, **kwargs,
-        )
+        return weighted_avg_matches(*self._session(kwargs), queries, values, **kwargs)
 
     def must_not(self, queries, boost=1.0, **kwargs) -> DataFrame:
         """-> (query_id, rank, doc_id, score): pure-negation retrieval —
@@ -325,13 +291,7 @@ class Searcher:
         match_all axis and the membership pass."""
         from angle_spark.query.boosting import must_not_topk
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return must_not_topk(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            boost=boost, **kwargs,
-        )
+        return must_not_topk(*self._session(kwargs), queries, boost=boost, **kwargs)
 
     def function_score(self, queries, factors, **kwargs) -> DataFrame:
         """-> (query_id, rank, doc_id, score): BM25 * per-doc factor
@@ -341,13 +301,7 @@ class Searcher:
         tombstones apply."""
         from angle_spark.query.function_score import function_score_topk
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return function_score_topk(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            factors, **kwargs,
-        )
+        return function_score_topk(*self._session(kwargs), queries, factors, **kwargs)
 
     def top_hits(self, queries, groups, n=3, **kwargs) -> DataFrame:
         """-> (query_id, group, rank, doc_id, score): the top-n hits by
@@ -356,13 +310,7 @@ class Searcher:
         session's tombstones apply."""
         from angle_spark.query.wand import top_hits_matches
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return top_hits_matches(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            groups, n=n, **kwargs,
-        )
+        return top_hits_matches(*self._session(kwargs), queries, groups, n=n, **kwargs)
 
     def has_child(self, queries, parents, score_mode="max",
                   **kwargs) -> DataFrame:
@@ -374,12 +322,8 @@ class Searcher:
         apply."""
         from angle_spark.query.join_field import parent_topk
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
         return parent_topk(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            parents, score_mode=score_mode, **kwargs,
+            *self._session(kwargs), queries, parents, score_mode=score_mode, **kwargs,
         )
 
     def cardinality(self, queries, values, **kwargs) -> DataFrame:
@@ -390,13 +334,7 @@ class Searcher:
         tombstones apply."""
         from angle_spark.query.wand import cardinality_matches
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return cardinality_matches(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            values, **kwargs,
-        )
+        return cardinality_matches(*self._session(kwargs), queries, values, **kwargs)
 
     def adjacency(self, queries, **kwargs) -> DataFrame:
         """-> (query_a, query_b, n_docs): pairwise co-match counts of
@@ -404,13 +342,7 @@ class Searcher:
         the session's tombstones apply."""
         from angle_spark.query.wand import adjacency_matrix
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return adjacency_matrix(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            **kwargs,
-        )
+        return adjacency_matrix(*self._session(kwargs), queries, **kwargs)
 
     def composite(self, queries, groups, size=10, after=None,
                   values=None, **kwargs) -> DataFrame:
@@ -419,11 +351,8 @@ class Searcher:
         wand.composite_buckets); the session's tombstones apply."""
         from angle_spark.query.wand import composite_buckets
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
         return composite_buckets(
-            self.spark, self._merged, self._tstats, self.meta, queries,
+            *self._session(kwargs), queries,
             groups, size=size, after=after, values=values, **kwargs,
         )
 
@@ -434,12 +363,7 @@ class Searcher:
         doc_ids is a bounded list."""
         from angle_spark.query.termvectors import term_vectors
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        return term_vectors(
-            self.spark, self._merged, self._tstats, self.meta, doc_ids,
-            positions=positions,
-        )
+        return term_vectors(*self._session(), doc_ids, positions=positions)
 
     def suggest(self, words, max_dist=2, k=3, suggest_mode="always") -> DataFrame:
         """-> (word, rank, term, dist, df): spell suggestions from this
@@ -449,8 +373,7 @@ class Searcher:
         contract as its other vocabulary rewrites."""
         from angle_spark.query.suggest import suggest_terms
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
+        self._session()
         return suggest_terms(
             self.spark, self._vocab_df(), words,
             max_dist=max_dist, k=k, suggest_mode=suggest_mode,
@@ -461,8 +384,7 @@ class Searcher:
         (query/suggest.complete_terms) from this index's vocabulary."""
         from angle_spark.query.suggest import complete_terms
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
+        self._session()
         return complete_terms(self.spark, self._vocab_df(), prefixes, k=k)
 
     def _vocab_df(self) -> DataFrame:
@@ -492,13 +414,7 @@ class Searcher:
         tombstones apply."""
         from angle_spark.query.wand import group_matches
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        kwargs.setdefault("deletes", self.deletes)
-        return group_matches(
-            self.spark, self._merged, self._tstats, self.meta, queries,
-            groups, values, **kwargs,
-        )
+        return group_matches(*self._session(kwargs), queries, groups, values, **kwargs)
 
     def explain(self, queries, results: DataFrame) -> DataFrame:
         """Per-hit BM25 breakdown (query/explain.py): one row per
@@ -507,11 +423,7 @@ class Searcher:
         reported score exactly."""
         from angle_spark.query.explain import explain_hits
 
-        if self._merged is None:
-            raise RuntimeError("Searcher is closed")
-        return explain_hits(
-            self.spark, self._merged, self._tstats, self.meta, queries, results
-        )
+        return explain_hits(*self._session(), queries, results)
 
     def close(self) -> None:
         if self._merged is not None:

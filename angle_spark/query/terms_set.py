@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from angle_spark.index.build import IndexMeta
 from angle_spark.index.stats import idf_value
 from angle_spark.query.wand import (
-    SHARD_SEGMENTS,
     _shard_and_rank,
     query_term_stats,
 )
@@ -55,7 +54,6 @@ def terms_set_topk(
     meta: IndexMeta,
     queries,
     m_field: DataFrame,
-    shard_segments: int | None = SHARD_SEGMENTS,
     deletes: DataFrame | None = None,
     doc_filter: DataFrame | None = None,
 ) -> DataFrame:
@@ -116,7 +114,6 @@ def terms_set_topk(
         sorted(cand),
         False,
         False,
-        shard_segments,
         deletes,
         "mm",
         0,

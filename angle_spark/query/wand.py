@@ -30,6 +30,9 @@ property-based fuzz guards bitwise prune/exhaustive identity
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
 
@@ -51,7 +54,6 @@ from angle_spark.index.deletes import mask_postings
 from angle_spark.index.docvalues import DocValues, read_segment_values
 from angle_spark.index.stats import idf_value
 
-SHARD_SEGMENTS = None  # auto: data-derived shard count (see _shard_and_rank)
 SHARD_TARGET_DOCS = 32768  # docs per scoring shard (auto shard sizing)
 
 # MaxScore engages only for query batches at most this large. Measured on
@@ -61,43 +63,6 @@ SHARD_TARGET_DOCS = 32768  # docs per scoring shard (auto shard sizing)
 # passes are pure overhead (~25%). Larger batches take the cached
 # exhaustive fold for every term.
 MAXSCORE_MAX_BATCH = 4
-
-_OUT_SCHEMA = "query_id string, doc_id long, score double"
-_COUNT_SCHEMA = "query_id string, n long"
-# stats partials: per-(query, shard) matched-doc count, value count and
-# the value fold (empty-value shards ship the fold identities +inf/-inf/0
-# so the final min/max/sum ignore them without NULL gymnastics)
-_STATS_SCHEMA = (
-    "query_id string, n_docs long, n_vals long, "
-    "vsum double, vmin double, vmax double, vsumsq double"
-)
-# bucketed-stats partials: the stats fold keyed by the doc's
-# dictionary-encoded group code (ES terms-agg buckets)
-_GROUP_SCHEMA = (
-    "query_id string, gcode long, n_docs long, n_vals long, "
-    "vsum double, vmin double, vmax double"
-)
-# parent-score partials (collector="group_score"): per (query, parent
-# code) count + fold of the matched CHILDREN'S BM25 SCORES — the ES
-# has_child / parent-join shape. Unlike group_stats there is no label
-# dictionary: the numeric parent id IS the code (rides the side channel
-# as a double, exact to 2^53), so parent cardinality can be corpus-scale
-_GROUP_SCORE_SCHEMA = (
-    "query_id string, gcode long, n_docs long, "
-    "ssum double, smin double, smax double"
-)
-# matched-value rows (collector="values"): one row per (query, matched
-# doc WITH a value) — the exact-percentile feed; O(matches), not a
-# constant-size partial by nature (order statistics don't fold)
-_VALUES_SCHEMA = "query_id string, val double"
-# per-bucket top hits (collector="group_topk"): each shard ships at most
-# group_k rows per (query, bucket) it sees — the ES top_hits
-# sub-aggregation's shard-local phase
-_GROUP_TOPK_SCHEMA = "query_id string, gcode long, doc_id long, score double"
-# bare membership (collector="ids"): one (query, doc) row per match, no
-# scores — the export/join feed (matrix_stats, terms-lookup joins);
-# narrower than rank rows, O(matches) by nature
-_IDS_SCHEMA = "query_id string, doc_id long"
 
 
 def query_term_stats(tstats, terms: list[str]) -> pd.DataFrame:
@@ -137,6 +102,412 @@ def _topk_arrays(doc_ids: np.ndarray, scores: np.ndarray, k: int):
         doc_ids, scores = doc_ids[keep], scores[keep]
     sel = np.lexsort((doc_ids, -scores))[:k]
     return doc_ids[sel], scores[sel]
+
+
+def _member(kdocs: np.ndarray | None, doc_ids: np.ndarray):
+    """-> (mask of the doc_ids present in the ascending ``kdocs``, the
+    positions of the present ones in ``kdocs``)."""
+    if kdocs is None or not kdocs.size:
+        return np.zeros(len(doc_ids), dtype=bool), np.empty(0, dtype=np.int64)
+    pos = np.searchsorted(kdocs, doc_ids)
+    pos[pos == kdocs.size] = 0
+    hit = kdocs[pos] == doc_ids
+    return hit, pos[hit]
+
+
+def _lookup(keys, doc_ids: np.ndarray):
+    """-> (mask of the doc_ids that carry a key, their keys in doc order);
+    ``keys`` is a doc-ascending (docs, values) pair or None."""
+    hit, at = _member(None if keys is None else keys[0], doc_ids)
+    return hit, keys[1][at] if at.size else np.empty(0)
+
+
+def _cursor(q) -> tuple[float, int] | None:
+    """the query's search_after cursor (Lucene IndexSearcher.searchAfter):
+    docs rank strictly AFTER (score, doc) under the shared (score DESC,
+    doc_id ASC) order. NaN on the broadcast frame = no cursor (page 1)."""
+    a_s = float(getattr(q, "after_s", np.nan))
+    return (a_s, int(getattr(q, "after_d", -1))) if a_s == a_s else None
+
+
+# Per-query shard folds: (query row, matched doc_ids, their scores, sort
+# keys, group keys, group_k) -> the query's partial columns after
+# query_id, or None for no rows. Every fold sees the COMPLETE distinct
+# matched set except topk's (only topk runs with pruning on).
+
+
+def _fold_topk(q, doc_ids, scores, sort_keys, group_keys, group_k):
+    if sort_keys is not None:
+        # sort-by-field: the sort key REPLACES relevance for selection
+        # and output; docs missing a key sort last (-inf under the shared
+        # largest-first selection)
+        hit, keys = _lookup(sort_keys, doc_ids)
+        scores = np.full(len(doc_ids), -np.inf)
+        scores[hit] = keys
+    cur = _cursor(q)
+    if cur is not None:
+        # page membership: strictly after the cursor under the selection
+        # order. Applied AFTER any sort-key replacement (the cursor lives
+        # in selection-key space) and before the shard-local cut, so
+        # per-shard candidate cost stays k — the scale advantage over
+        # offset paging. Idempotent where the pruned walk already filtered.
+        keepc = (scores < cur[0]) | ((scores == cur[0]) & (doc_ids > cur[1]))
+        doc_ids, scores = doc_ids[keepc], scores[keepc]
+    return _topk_arrays(doc_ids, scores, int(q.k))
+
+
+def _fold_count(q, doc_ids, scores, sort_keys, group_keys, group_k):
+    return (np.array([len(doc_ids)]),)
+
+
+def _fold_stats(q, doc_ids, scores, sort_keys, group_keys, group_k):
+    # docs missing a value count in n_docs but not in the value fold (the
+    # ES stats-agg missing rule); empty folds ship the identities
+    # (+inf/-inf/0), which the final min/max/sum ignore
+    _, vals = _lookup(sort_keys, doc_ids)
+    n = len(vals)
+    return tuple(
+        np.array([x])
+        for x in (
+            len(doc_ids),
+            n,
+            vals.sum() if n else 0.0,
+            vals.min() if n else np.inf,
+            vals.max() if n else -np.inf,
+            (vals * vals).sum() if n else 0.0,
+        )
+    )
+
+
+def _fold_group_stats(q, doc_ids, scores, sort_keys, group_keys, group_k):
+    # matched docs map to their group code; docs WITHOUT a group are
+    # skipped entirely (the ES terms-agg missing rule — no bucket, no
+    # count), docs with a group but no metric value count in the bucket's
+    # n_docs only. One partial row per (query, code) this shard sees.
+    hit, codes = _lookup(group_keys, doc_ids)
+    if not hit.any():
+        return None
+    mdocs = doc_ids[hit]
+    vhit, vals = _lookup(sort_keys, mdocs)
+    v = np.full(len(mdocs), np.nan)
+    v[vhit] = vals
+    agg = (
+        pd.DataFrame({"c": codes.astype(np.int64), "v": v})
+        .groupby("c")["v"]
+        .agg(["size", "count", "sum", "min", "max"])
+    )
+    has = agg["count"].to_numpy() > 0
+    return (
+        agg.index.to_numpy(),
+        agg["size"].to_numpy(),
+        agg["count"].to_numpy(),
+        np.where(has, agg["sum"], 0.0),
+        np.where(has, agg["min"], np.inf),
+        np.where(has, agg["max"], -np.inf),
+    )
+
+
+def _fold_group_score(q, doc_ids, scores, sort_keys, group_keys, group_k):
+    # each matched CHILD contributes its exact BM25 score to its parent's
+    # fold; docs without a parent mapping are skipped (the ES parent-join
+    # missing rule). docIDs follow (conv_id, turn_idx), so a
+    # conversation's turns are docID-contiguous and usually land in ONE
+    # shard: the partial volume ~= matched parents, not matches x shards.
+    hit, codes = _lookup(group_keys, doc_ids)
+    if not hit.any():
+        return None
+    agg = (
+        pd.DataFrame({"c": codes.astype(np.int64), "s": scores[hit]})
+        .groupby("c")["s"]
+        .agg(["size", "sum", "min", "max"])
+    )
+    return (agg.index.to_numpy(), *(agg[c].to_numpy() for c in agg.columns))
+
+
+def _fold_group_topk(q, doc_ids, scores, sort_keys, group_keys, group_k):
+    # at most group_k rows per (query, bucket) this shard sees — the
+    # bounded shard-local phase of ES top_hits; docs without a group are
+    # skipped (the ES missing rule)
+    hit, codes = _lookup(group_keys, doc_ids)
+    if not hit.any():
+        return None
+    gd, mdocs, mscores = codes.astype(np.int64), doc_ids[hit], scores[hit]
+    # (bucket asc, score desc, doc asc) — then the first group_k rows of
+    # each bucket run
+    order = np.lexsort((mdocs, -mscores, gd))
+    gd, mdocs, mscores = gd[order], mdocs[order], mscores[order]
+    starts = np.flatnonzero(np.r_[True, gd[1:] != gd[:-1]])
+    lens = np.diff(np.r_[starts, gd.size])
+    keep = np.arange(gd.size) - np.repeat(starts, lens) < group_k
+    return gd[keep], mdocs[keep], mscores[keep]
+
+
+def _fold_ids(q, doc_ids, scores, sort_keys, group_keys, group_k):
+    return (doc_ids,)
+
+
+def _fold_values(q, doc_ids, scores, sort_keys, group_keys, group_k):
+    # each matched doc's metric value — the exact-percentile feed; docs
+    # without a value are skipped (the ES missing rule)
+    return (_lookup(sort_keys, doc_ids)[1],)
+
+
+def _fold_distinct_values(q, doc_ids, scores, sort_keys, group_keys, group_k):
+    # shard-local map-side combine for distinct counting: a value seen by
+    # many matched docs in this shard ships once
+    return (pd.unique(_lookup(sort_keys, doc_ids)[1]),)
+
+
+class _Tail(NamedTuple):
+    """per-call inputs of the driver-side reduce"""
+
+    spark: SparkSession
+    tokenized: list  # (query_id, k, ...) per query: the final k of topk
+    offset: int
+    group_k: int
+    negate: bool  # ascending sort keys ride negated; un-negate at the end
+
+
+def _reduce_topk(local: DataFrame, tail: _Tail) -> DataFrame:
+    kdf = tail.spark.createDataFrame(
+        [(qid, k) for qid, k, *_ in tail.tokenized], schema="query_id string, k int"
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    out = (
+        local.join(F.broadcast(kdf), "query_id")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= F.col("k"))
+    )
+    if tail.offset:
+        # k was inflated by the offset driver-side; the page is the
+        # global-rank window (offset, k]. rank stays GLOBAL so
+        # consecutive pages tile the unpaged ranking exactly.
+        out = out.filter(F.col("rank") > F.lit(tail.offset))
+    if tail.negate:
+        # keys were negated on the way in so the shared largest-first
+        # selection could run unchanged; hand back the true key. A doc
+        # missing its key came through as -inf and flips to +inf —
+        # still "missing sorts last" under the ascending order
+        out = out.withColumn("score", -F.col("score"))
+    return out.select("query_id", "rank", "doc_id", "score")
+
+
+def _reduce_count(local: DataFrame, tail: _Tail) -> DataFrame:
+    # shard-local matched counts are disjoint by construction (a doc's
+    # postings live in exactly one shard), so the global total is a plain
+    # sum — no rank window, no k
+    return local.groupBy("query_id").agg(F.sum("n").cast("long").alias("total_hits"))
+
+
+def _reduce_stats(local: DataFrame, tail: _Tail) -> DataFrame:
+    # shard partials fold associatively (disjoint doc sets); the
+    # empty-fold identities (+inf/-inf/0) vanish under min/max/sum, and an
+    # all-missing query NULLs its value stats. avg is sum/count (not a
+    # running mean) so integer-valued metrics stay exact; float sums are
+    # shard-fold-order deterministic but the cross-shard fold is Spark's —
+    # ULP tolerance applies, as with every distributed double sum here.
+    agg = local.groupBy("query_id").agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("n_vals").cast("long").alias("n_values"),
+        F.sum("vsum").alias("sum"),
+        F.min("vmin").alias("min"),
+        F.max("vmax").alias("max"),
+        F.sum("vsumsq").alias("sumsq"),
+    )
+    has = F.col("n_values") > 0
+    return agg.select(
+        "query_id",
+        "n_docs",
+        "n_values",
+        F.when(has, F.col("sum")).alias("sum"),
+        F.when(has, F.col("min")).alias("min"),
+        F.when(has, F.col("max")).alias("max"),
+        F.when(has, F.col("sum") / F.col("n_values")).alias("avg"),
+        F.when(has, F.col("sumsq")).alias("sum_of_squares"),
+    )
+
+
+def _reduce_group_stats(local: DataFrame, tail: _Tail) -> DataFrame:
+    # the stats fold keyed by (query, bucket code); the bucket count is
+    # facet-cardinality bounded, so this groupBy shuffles a narrow frame
+    agg = local.groupBy("query_id", "gcode").agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("n_vals").cast("long").alias("n_values"),
+        F.sum("vsum").alias("sum"),
+        F.min("vmin").alias("min"),
+        F.max("vmax").alias("max"),
+    )
+    has = F.col("n_values") > 0
+    return agg.select(
+        "query_id",
+        "gcode",
+        "n_docs",
+        "n_values",
+        F.when(has, F.col("sum")).alias("sum"),
+        F.when(has, F.col("min")).alias("min"),
+        F.when(has, F.col("max")).alias("max"),
+        F.when(has, F.col("sum") / F.col("n_values")).alias("avg"),
+    )
+
+
+def _reduce_group_score(local: DataFrame, tail: _Tail) -> DataFrame:
+    # the group_stats merge over child SCORES, keyed by (query, parent
+    # code): a match-bounded frame, never the corpus. min/max fold
+    # exactly; sum (and avg = sum/count) carries the cross-shard
+    # double-fold ULP tolerance.
+    agg = local.groupBy("query_id", "gcode").agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("ssum").alias("sum"),
+        F.min("smin").alias("min"),
+        F.max("smax").alias("max"),
+    )
+    return agg.select(
+        "query_id", "gcode", "n_docs", "sum", "min", "max",
+        (F.col("sum") / F.col("n_docs")).alias("avg"),
+    )
+
+
+def _reduce_group_topk(local: DataFrame, tail: _Tail) -> DataFrame:
+    # shards shipped <= group_k rows per (query, bucket) each; the global
+    # cut is a window over that bounded frame (shards x buckets x
+    # group_k), partitioned by the bucket key — never corpus
+    wg = Window.partitionBy("query_id", "gcode").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (
+        local.withColumn("rank", F.row_number().over(wg))
+        .filter(F.col("rank") <= F.lit(tail.group_k))
+        .select("query_id", "gcode", "rank", "doc_id", "score")
+    )
+
+
+def _reduce_none(local: DataFrame, tail: _Tail) -> DataFrame:
+    # O(matches) rows whose fold the caller owns (order statistics,
+    # distinct counts, joins); shards partition docs, so the rows are
+    # already distinct per (query, doc) — no reduce at all
+    return local
+
+
+_NP_TYPES = {"string": object, "long": np.int64, "int": np.int32, "double": np.float64}
+
+
+@dataclass(frozen=True)
+class Collector:
+    """One collector of the query tail — Lucene's Collector: the per-hit
+    fold that runs inside each shard task plus the driver-side reduce
+    that merges the shards' partials.
+
+    ``partial``/``result`` are the DDL of a shard's partial rows and of
+    the reduced frame (a batch that reaches no shard returns an empty
+    ``result`` frame). Only a ranking collector (``ranks``) keeps block
+    pruning — every other one needs the complete matched set, so it
+    forces prune=False — and only it takes offset pages, search_after
+    cursors, sort_multiply and demote_sets. ``needs`` names the side
+    input the collector requires (``source`` describes it), ``rejects``
+    the wand_topk arguments meaningless with it, and ``no_sort`` (when
+    not None) rejects sort_meta, with that reason."""
+
+    partial: str
+    result: str
+    fold: Callable
+    reduce: Callable[[DataFrame, _Tail], DataFrame]
+    ranks: bool = False
+    needs: str | None = None
+    source: str = ""
+    rejects: tuple[str, ...] = ("offset", "sort_ascending")
+    no_sort: str | None = None
+
+    def frame(self, qids: list, parts: list[tuple]) -> pd.DataFrame:
+        """one shard's partial rows from its per-query fold outputs"""
+        fields = [f.split() for f in self.partial.split(",")]
+        cols = {
+            "query_id": np.repeat(
+                np.array(qids, dtype=object), [len(p[0]) for p in parts]
+            )
+        }
+        for i, (name, typ) in enumerate(fields[1:]):
+            cols[name] = (
+                np.concatenate([p[i] for p in parts]) if parts else np.empty(0)
+            ).astype(_NP_TYPES[typ], copy=False)
+        return pd.DataFrame(cols)
+
+
+COLLECTORS: dict[str, Collector] = {
+    "topk": Collector(
+        "query_id string, doc_id long, score double",
+        "query_id string, rank int, doc_id long, score double",
+        _fold_topk, _reduce_topk, ranks=True, rejects=(),
+    ),
+    # Lucene TotalHitCountCollector: the shard's exact matched count
+    "count": Collector(
+        "query_id string, n long",
+        "query_id string, total_hits long",
+        _fold_count, _reduce_count, rejects=("offset",), no_sort="",
+    ),
+    # ES stats agg: per-(query, shard) matched-doc count, value count and
+    # the value fold
+    "stats": Collector(
+        "query_id string, n_docs long, n_vals long, "
+        "vsum double, vmin double, vmax double, vsumsq double",
+        "query_id string, n_docs long, n_values long, sum double, min double, "
+        "max double, avg double, sum_of_squares double",
+        _fold_stats, _reduce_stats,
+        needs="sort_meta", source="(doc_id, value) source — use aggregate_matches()",
+    ),
+    # ES terms-agg buckets: the stats fold keyed by the doc's
+    # dictionary-encoded group code
+    "group_stats": Collector(
+        "query_id string, gcode long, n_docs long, n_vals long, "
+        "vsum double, vmin double, vmax double",
+        "query_id string, gcode long, n_docs long, n_values long, "
+        "sum double, min double, max double, avg double",
+        _fold_group_stats, _reduce_group_stats,
+        needs="group_meta", source="(doc_id, gcode) bucket source — use group_matches()",
+    ),
+    # ES top_hits under a terms agg: per-bucket top hits
+    "group_topk": Collector(
+        "query_id string, gcode long, doc_id long, score double",
+        "query_id string, gcode long, rank int, doc_id long, score double",
+        _fold_group_topk, _reduce_group_topk,
+        needs="group_meta", source="(doc_id, gcode) bucket source — use top_hits_matches()",
+        no_sort=" — hits rank by score",
+    ),
+    # ES has_child / parent-join: per (query, parent code) count + fold
+    # of the matched CHILDREN'S BM25 SCORES. The numeric parent id IS the
+    # code (rides the side channel as a double, exact to 2^53), so parent
+    # cardinality can be corpus-scale
+    "group_score": Collector(
+        "query_id string, gcode long, n_docs long, ssum double, smin double, smax double",
+        "query_id string, gcode long, n_docs long, "
+        "sum double, min double, max double, avg double",
+        _fold_group_score, _reduce_group_score,
+        needs="group_meta", source="(doc_id, gcode) parent source — use parent_matches()",
+        no_sort=" — the aggregated value IS the child score",
+    ),
+    # one row per (query, matched doc WITH a value): the exact-percentile
+    # feed, O(matches) by nature (order statistics don't fold)
+    "values": Collector(
+        "query_id string, val double",
+        "query_id string, val double",
+        _fold_values, _reduce_none, needs="sort_meta",
+        source="(doc_id, value) source — use percentile_matches() / "
+        "cardinality_matches()",
+    ),
+    # the values feed deduped per (query, value) shard-locally: rows leave
+    # a shard bounded by its distinct values, not its matches
+    "distinct_values": Collector(
+        "query_id string, val double",
+        "query_id string, val double",
+        _fold_distinct_values, _reduce_none, needs="sort_meta",
+        source="(doc_id, value) source — use percentile_matches() / "
+        "cardinality_matches()",
+    ),
+    # bare membership, no scores: the export/join feed (matrix_stats,
+    # terms-lookup joins), O(matches) by nature
+    "ids": Collector(
+        "query_id string, doc_id long",
+        "query_id string, doc_id long",
+        _fold_ids, _reduce_none, no_sort="",
+    ),
+}
 
 
 def _block_bounds(g: pd.DataFrame, idf: float, avgdl: float) -> np.ndarray:
@@ -277,26 +648,23 @@ def _score_shard_multi(
     slop: int = 0,
     allowed: np.ndarray | None = None,
     field_sets: dict[int, np.ndarray] | None = None,
-    count_only: bool = False,
+    collector: str = "topk",
     sort_keys: tuple[np.ndarray, np.ndarray] | None = None,
-    stats_only: bool = False,
     group_keys: tuple[np.ndarray, np.ndarray] | None = None,
-    group_only: bool = False,
-    values_only: bool = False,
-    values_unique: bool = False,
-    group_topk_n: int | None = None,
-    sort_mult: bool = False,
-    ids_only: bool = False,
-    group_score_only: bool = False,
+    factors: tuple[np.ndarray, np.ndarray] | None = None,
+    group_k: int = 3,
 ) -> pd.DataFrame:
     """One shard's blocks (each block shipped ONCE, not once per query)
     scored against the whole query set.
 
-    count_only=True returns (query_id, n) — the shard's exact matched
-    count per query instead of scored rows. Requires prune=False (the
+    Each query's matched (doc_ids, scores) go to the fold of
+    ``COLLECTORS[collector]``, which turns them into the collector's
+    partial rows. Every collector but topk runs with prune=False (the
     caller enforces it): every non-pruned branch materializes the full
-    distinct matched-doc set before top-k selection, so the count is
-    len(doc_ids) with zero extra work.
+    distinct matched-doc set, so a count or an aggregate costs no extra
+    scoring work. ``sort_keys`` / ``group_keys`` are the doc-ascending
+    (docs, values) side inputs the folds read; ``factors`` multiply
+    scores before the fold (function_score), like demotion does.
 
     Sharing: each block decodes at most once per shard task, and the
     idf-free impact array computes once — cached across every query that
@@ -337,6 +705,10 @@ def _score_shard_multi(
     between two docs whose scores differ by less than the fold-order ULP
     noise (caught by tests/test_wand_property.py, kept as a regression
     case)."""
+    coll = COLLECTORS[collector]
+    assert coll.ranks or not prune, f"collector={collector!r} needs prune=False"
+    if pdf.empty:  # side-channel rows reached a shard with no candidate blocks
+        return coll.frame([], [])
     by_term: dict[str, pd.DataFrame] = {
         # sorted by first_doc: per-term concatenated posting arrays are
         # then doc-ascending (disjoint block ranges), keeping every fold
@@ -345,6 +717,23 @@ def _score_shard_multi(
     }
     base = int(pdf["first_doc"].min())
     span = int(pdf["last_doc"].max()) - base + 1
+
+    def apply_masks(d, tf, dl):
+        """drop the postings of docs outside the allow-list (filtered
+        retrieval) or tombstoned. Masking at DECODE time keeps pruning
+        exact: block bounds stay valid upper bounds for the surviving
+        postings, and theta only ever rises on live docs — a post-scoring
+        filter would instead let deleted docs inflate theta and prune
+        away live top-k members."""
+        if allowed is not None:
+            keep = _member(allowed, d)[0]
+        elif deleted is not None:
+            keep = mask_postings(d, deleted)
+        else:
+            keep = None
+        if keep is None or keep.all():
+            return d, tf, dl
+        return d[keep], tf[keep], dl[keep]
 
     decoded: dict[tuple, tuple] = {}
 
@@ -355,29 +744,11 @@ def _score_shard_multi(
         key = (row.term, row.first_doc)
         hit = decoded.get(key)
         if hit is None:
-            d = decode_doc_deltas(row.docs_bin)
-            tf = decode_tfs(row.tfs_bin).astype(np.float64)
-            dl = decode_varints(row.dls_bin).astype(np.float64)
-            if allowed is not None:
-                # allow-list (filtered retrieval) masked at DECODE time —
-                # same exactness argument as tombstones below
-                if allowed.size == 0:
-                    d, tf, dl = d[:0], tf[:0], dl[:0]
-                else:
-                    idx = np.searchsorted(allowed, d)
-                    idx[idx == allowed.size] = 0
-                    keep = allowed[idx] == d
-                    if not keep.all():
-                        d, tf, dl = d[keep], tf[keep], dl[keep]
-            elif deleted is not None:
-                # tombstone masking at DECODE time keeps pruning exact:
-                # block bounds stay valid upper bounds for the surviving
-                # postings, and theta only ever rises on live docs — a
-                # post-scoring filter would instead let deleted docs
-                # inflate theta and prune away live top-k members
-                keep = mask_postings(d, deleted)
-                if keep is not None:
-                    d, tf, dl = d[keep], tf[keep], dl[keep]
+            d, tf, dl = apply_masks(
+                decode_doc_deltas(row.docs_bin),
+                decode_tfs(row.tfs_bin).astype(np.float64),
+                decode_varints(row.dls_bin).astype(np.float64),
+            )
             denom = tf + K1 * (1.0 - B + B * dl / avgdl)
             hit = (d, tf, denom)
             decoded[key] = hit
@@ -395,29 +766,18 @@ def _score_shard_multi(
         per-call numpy overhead on tiny arrays — not byte volume — was
         57% of shard-task CPU at the 2M-doc scale bench. Value-identical
         to the per-block decode() path by the codec's concat contract;
-        tombstone/allow masking applies to the concatenated arrays with
-        the same elementwise semantics as the per-block masking."""
+        masking applies to the concatenated arrays with the same
+        elementwise semantics as per block."""
         hit = term_cache.get(term)
         if hit is None:
             g = by_term[term]
-            d = decode_doc_deltas_concat(g["docs_bin"].tolist())
             tf_v, _ = decode_varints_concat(g["tfs_bin"].tolist())
             dl_v, _ = decode_varints_concat(g["dls_bin"].tolist())
-            tf = (tf_v.astype(np.int64) + 1).astype(np.float64)
-            dl = dl_v.astype(np.float64)
-            if allowed is not None:
-                if allowed.size == 0:
-                    d, tf, dl = d[:0], tf[:0], dl[:0]
-                else:
-                    idx = np.searchsorted(allowed, d)
-                    idx[idx == allowed.size] = 0
-                    keep = allowed[idx] == d
-                    if not keep.all():
-                        d, tf, dl = d[keep], tf[keep], dl[keep]
-            elif deleted is not None:
-                keep = mask_postings(d, deleted)
-                if keep is not None:
-                    d, tf, dl = d[keep], tf[keep], dl[keep]
+            d, tf, dl = apply_masks(
+                decode_doc_deltas_concat(g["docs_bin"].tolist()),
+                (tf_v.astype(np.int64) + 1).astype(np.float64),
+                dl_v.astype(np.float64),
+            )
             denom = tf + K1 * (1.0 - B + B * dl / avgdl)
             hit = (d, tf, denom)
             term_cache[term] = hit
@@ -649,17 +1009,11 @@ def _score_shard_multi(
 
     small_batch = len(qt) <= MAXSCORE_MAX_BATCH
 
-    out_q, out_d, out_s = [], [], []
-    out_g: list = []  # bucket codes (collector="group_topk" only)
-    stats_rows: list[tuple] = []
+    qids: list = []
+    parts: list[tuple] = []
     for q in qt.itertuples(index=False):
         k = int(q.k)
-        # search_after cursor (Lucene IndexSearcher.searchAfter): docs
-        # rank strictly AFTER (after_s, after_d) under the shared
-        # (score DESC, doc_id ASC) order. NaN = no cursor (page 1).
-        a_s = float(getattr(q, "after_s", np.nan))
-        has_cursor = a_s == a_s
-        a_d = int(getattr(q, "after_d", -1))
+        cur = _cursor(q)
         terms = sorted(zip(q.terms, q.idfs))
         present = [(t, idf) for t, idf in terms if t in by_term]
         if not present:
@@ -790,12 +1144,12 @@ def _score_shard_multi(
                 d, tf, denom = decode(rows[bi])
                 # same associativity as the oracle: ((idf*tf)*(k1+1))/denom
                 s = idf * tf * (K1 + 1.0) / denom
-                if has_cursor:
+                if cur is not None:
                     # cursor filter BEFORE theta accounting: theta is
                     # the kth-best AFTER-cursor score (Lucene's
                     # searchAfter min-competitive rule) — an unfiltered
                     # theta would over-prune blocks holding page docs
-                    keepc = (s < a_s) | ((s == a_s) & (d > a_d))
+                    keepc = (s < cur[0]) | ((s == cur[0]) & (d > cur[1]))
                     d, s = d[keepc], s[keepc]
                 doc_parts.append(d)
                 score_parts.append(s)
@@ -807,7 +1161,7 @@ def _score_shard_multi(
         elif (
             prune
             and small_batch
-            and not has_cursor
+            and cur is None
             and any(term_heat.get(t, 0) < 1 for t, _ in present)
         ):
             # small batch AND a cold term -> decode dominates: MaxScore
@@ -856,311 +1210,24 @@ def _score_shard_multi(
             # prune=False.
             assert not prune
             ds = field_sets.get(dleaf) if field_sets else None
-            if ds is not None and ds.size:
-                posn = np.searchsorted(ds, doc_ids)
-                posn[posn == ds.size] = 0
-                hitn = ds[posn] == doc_ids
-                if hitn.any():
-                    scores = np.where(
-                        hitn, scores * float(q.demote_nb), scores
-                    )
+            hitn, _ = _member(ds, doc_ids)
+            if hitn.any():
+                scores = np.where(hitn, scores * float(q.demote_nb), scores)
+        if factors is not None:
+            # function_score (ES function_score boost_mode=multiply): the
+            # shipped per-doc factor MULTIPLIES relevance; docs missing a
+            # factor keep their BM25 unchanged (factor 1 — the ES missing
+            # rule for score functions)
+            hitf, fs = _lookup(factors, doc_ids)
+            mult = np.ones(len(doc_ids))
+            mult[hitf] = fs
+            scores = scores * mult
 
-        if count_only:
-            # prune=False (enforced by the caller) means every branch
-            # above produced the complete distinct matched set
-            assert not prune
-            out_q.append(np.array([q.query_id], dtype=object))
-            out_d.append(np.array([len(doc_ids)], dtype=np.int64))
-            continue
-
-        if group_only:
-            # bucketed-stats partials (prune=False enforced): matched
-            # docs map to their group code (group_keys); docs WITHOUT a
-            # group are skipped entirely (the ES terms-agg missing rule
-            # — no bucket, no count), docs with a group but no metric
-            # value count in the bucket's n_docs only. One partial row
-            # per (query, code) this shard sees.
-            assert not prune
-            gd = np.empty(0, dtype=np.int64)
-            gv = None
-            if group_keys is not None and group_keys[0].size and len(doc_ids):
-                gdocs, gcodes = group_keys
-                pos = np.searchsorted(gdocs, doc_ids)
-                pos[pos == gdocs.size] = 0
-                hitg = gdocs[pos] == doc_ids
-                mdocs = doc_ids[hitg]
-                gd = gcodes[pos[hitg]].astype(np.int64)
-                if sort_keys is not None and sort_keys[0].size and mdocs.size:
-                    sdocs, svals = sort_keys
-                    p2 = np.searchsorted(sdocs, mdocs)
-                    p2[p2 == sdocs.size] = 0
-                    gv = np.where(sdocs[p2] == mdocs, svals[p2], np.nan)
-            if gd.size:
-                dfp = pd.DataFrame(
-                    {"c": gd, "v": gv if gv is not None else np.nan}
-                )
-                agg = dfp.groupby("c")["v"].agg(
-                    ["size", "count", "sum", "min", "max"]
-                )
-                for code, r in agg.iterrows():
-                    nv = int(r["count"])
-                    stats_rows.append(
-                        (
-                            q.query_id,
-                            int(code),
-                            int(r["size"]),
-                            nv,
-                            float(r["sum"]) if nv else 0.0,
-                            float(r["min"]) if nv else np.inf,
-                            float(r["max"]) if nv else -np.inf,
-                        )
-                    )
-            continue
-
-        if group_score_only:
-            # parent-score partials (prune=False enforced): each matched
-            # CHILD contributes its exact BM25 score to its parent's
-            # fold; docs without a parent mapping are skipped (the ES
-            # parent-join missing rule). One partial row per (query,
-            # parent) this shard sees — and because docIDs are assigned
-            # in stable (conv_id, turn_idx) order, a conversation's
-            # turns are docID-contiguous and usually land in ONE shard,
-            # so the partial volume ~= matched parents, not matches x
-            # shards.
-            assert not prune
-            if group_keys is not None and group_keys[0].size and len(doc_ids):
-                gdocs, gcodes = group_keys
-                pos = np.searchsorted(gdocs, doc_ids)
-                pos[pos == gdocs.size] = 0
-                hitg = gdocs[pos] == doc_ids
-                gd = gcodes[pos[hitg]].astype(np.int64)
-                gs = scores[hitg]
-                if gd.size:
-                    dfp = pd.DataFrame({"c": gd, "s": gs})
-                    agg = dfp.groupby("c")["s"].agg(
-                        ["size", "sum", "min", "max"]
-                    )
-                    for code, r in agg.iterrows():
-                        stats_rows.append(
-                            (
-                                q.query_id,
-                                int(code),
-                                int(r["size"]),
-                                float(r["sum"]),
-                                float(r["min"]),
-                                float(r["max"]),
-                            )
-                        )
-            continue
-
-        if group_topk_n is not None:
-            # per-bucket top hits (prune=False enforced): matched docs
-            # map to their bucket code (group_keys); docs without a
-            # group are skipped (the ES missing rule). The shard ships
-            # at most group_topk_n rows per (query, bucket) it sees —
-            # the bounded shard-local phase of ES top_hits; the global
-            # per-(query, bucket) window is over shards x buckets x n
-            # rows, never the corpus.
-            assert not prune
-            if group_keys is not None and group_keys[0].size and len(doc_ids):
-                gdocs, gcodes = group_keys
-                pos = np.searchsorted(gdocs, doc_ids)
-                pos[pos == gdocs.size] = 0
-                hitg = gdocs[pos] == doc_ids
-                mdocs = doc_ids[hitg]
-                mscores = scores[hitg]
-                gd = gcodes[pos[hitg]].astype(np.int64)
-                if mdocs.size:
-                    # (bucket asc, score desc, doc asc) — then the first
-                    # group_topk_n rows of each bucket run
-                    order = np.lexsort((mdocs, -mscores, gd))
-                    gd_s, d_s, s_s = gd[order], mdocs[order], mscores[order]
-                    starts = np.flatnonzero(
-                        np.r_[True, gd_s[1:] != gd_s[:-1]]
-                    )
-                    lens = np.diff(np.r_[starts, gd_s.size])
-                    rank = np.arange(gd_s.size) - np.repeat(starts, lens)
-                    keep = rank < group_topk_n
-                    out_q.append(
-                        np.full(int(keep.sum()), q.query_id, dtype=object)
-                    )
-                    out_g.append(gd_s[keep])
-                    out_d.append(d_s[keep])
-                    out_s.append(s_s[keep])
-            continue
-
-        if ids_only:
-            # bare membership (prune=False enforced): every branch above
-            # produced the complete distinct matched set — ship the ids
-            if len(doc_ids):
-                out_q.append(np.full(len(doc_ids), q.query_id, dtype=object))
-                out_d.append(doc_ids)
-            continue
-
-        if values_only:
-            # matched-value rows (prune=False enforced): ship each
-            # matched doc's metric value — the exact-percentile feed.
-            # Docs without a value are skipped (the ES missing rule);
-            # the row volume is O(matches), the honest cost of exact
-            # order statistics (the t-digest sketch is the disclosed
-            # approximate alternative — percentile_matches(exact=False))
-            assert not prune
-            if sort_keys is not None and sort_keys[0].size and len(doc_ids):
-                sdocs, svals = sort_keys
-                pos = np.searchsorted(sdocs, doc_ids)
-                pos[pos == sdocs.size] = 0
-                hitk = sdocs[pos] == doc_ids
-                vals = svals[pos[hitk]]
-                if len(vals):
-                    out_q.append(np.full(len(vals), q.query_id, dtype=object))
-                    out_s.append(vals)
-            continue
-
-        if stats_only:
-            # metric-aggregation partials over the complete matched set
-            # (prune=False enforced): sort_keys is the (docs, values)
-            # source; docs missing a value count in n_docs but not in
-            # the value fold (the ES stats-agg missing rule). Empty
-            # folds ship the identities (+inf/-inf/0) — the final
-            # min/max/sum ignore them.
-            assert not prune
-            vals = np.empty(0)
-            if sort_keys is not None and sort_keys[0].size and len(doc_ids):
-                sdocs, svals = sort_keys
-                pos = np.searchsorted(sdocs, doc_ids)
-                pos[pos == sdocs.size] = 0
-                hitk = sdocs[pos] == doc_ids
-                vals = svals[pos[hitk]]
-            stats_rows.append(
-                (
-                    q.query_id,
-                    len(doc_ids),
-                    len(vals),
-                    float(vals.sum()) if len(vals) else 0.0,
-                    float(vals.min()) if len(vals) else np.inf,
-                    float(vals.max()) if len(vals) else -np.inf,
-                    float((vals * vals).sum()) if len(vals) else 0.0,
-                )
-            )
-            continue
-
-        if sort_keys is not None:
-            # prune=False enforced in both renditions: membership must
-            # be complete before keys apply
-            assert not prune
-            sdocs, svals = sort_keys
-            if sort_mult:
-                # function_score (ES function_score boost_mode=multiply):
-                # the shipped per-doc factor MULTIPLIES relevance; docs
-                # missing a factor keep their BM25 unchanged (factor 1 —
-                # the ES missing rule for score functions)
-                factors = np.ones(len(doc_ids))
-                if sdocs.size:
-                    pos = np.searchsorted(sdocs, doc_ids)
-                    pos[pos == sdocs.size] = 0
-                    hitk = sdocs[pos] == doc_ids
-                    factors[hitk] = svals[pos[hitk]]
-                scores = scores * factors
-            else:
-                # sort-by-field: the sort key REPLACES relevance for
-                # selection and output; docs missing a key sort last
-                # (-inf under the shared largest-first selection)
-                scores = np.full(len(doc_ids), -np.inf)
-                if sdocs.size:
-                    pos = np.searchsorted(sdocs, doc_ids)
-                    pos[pos == sdocs.size] = 0
-                    hitk = sdocs[pos] == doc_ids
-                    scores[hitk] = svals[pos[hitk]]
-
-        if has_cursor:
-            # page membership: strictly after the cursor under the
-            # selection order. Applied AFTER any sort-key replacement
-            # (the cursor lives in selection-key space) and before the
-            # shard-local cut, so per-shard candidate cost stays k —
-            # the scale advantage over offset paging. Idempotent where
-            # the pruned walk already filtered.
-            keepc = (scores < a_s) | ((scores == a_s) & (doc_ids > a_d))
-            doc_ids, scores = doc_ids[keepc], scores[keepc]
-        doc_ids, scores = _topk_arrays(doc_ids, scores, k)
-        out_q.append(np.full(len(doc_ids), q.query_id, dtype=object))
-        out_d.append(doc_ids)
-        out_s.append(scores)
-
-    if group_only:
-        return pd.DataFrame(
-            stats_rows,
-            columns=[
-                "query_id", "gcode", "n_docs", "n_vals",
-                "vsum", "vmin", "vmax",
-            ],
-        )
-    if group_score_only:
-        return pd.DataFrame(
-            stats_rows,
-            columns=["query_id", "gcode", "n_docs", "ssum", "smin", "smax"],
-        )
-    if stats_only:
-        return pd.DataFrame(
-            stats_rows,
-            columns=[
-                "query_id", "n_docs", "n_vals",
-                "vsum", "vmin", "vmax", "vsumsq",
-            ],
-        )
-    if group_topk_n is not None:
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": [], "gcode": [], "doc_id": [], "score": []}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "gcode": np.concatenate(out_g),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
-    if ids_only:
-        if not out_q:
-            return pd.DataFrame({"query_id": [], "doc_id": []})
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-            }
-        )
-    if values_only:
-        if not out_q:
-            return pd.DataFrame({"query_id": [], "val": []})
-        df = pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "val": np.concatenate(out_s),
-            }
-        )
-        if values_unique:
-            # shard-local map-side combine for distinct counting: a
-            # value seen by many matched docs in this shard ships once
-            df = df.drop_duplicates(ignore_index=True)
-        return df
-    if count_only:
-        if not out_q:
-            return pd.DataFrame({"query_id": [], "n": []})
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "n": np.concatenate(out_d),
-            }
-        )
-    if not out_q:
-        return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d),
-            "score": np.concatenate(out_s),
-        }
-    )
+        part = coll.fold(q, doc_ids, scores, sort_keys, group_keys, group_k)
+        if part is not None:
+            qids.append(q.query_id)
+            parts.append(part)
+    return coll.frame(qids, parts)
 
 
 def _split_toks(toks: list[str]) -> tuple[list[str], list[str]]:
@@ -1177,7 +1244,6 @@ def wand_topk(
     meta: IndexMeta,
     queries: DataFrame,
     prune: bool = True,
-    shard_segments: int | None = SHARD_SEGMENTS,
     deletes: DataFrame | None = None,
     mode: str = "or",
     slop: int = 0,
@@ -1403,26 +1469,24 @@ def wand_topk(
         raise ValueError("min_match is only valid with mode='mm'")
     if field_meta is not None and mode != "boolean":
         raise ValueError("field_meta is only valid with mode='boolean'")
-    if collector not in (
-        "topk", "count", "stats", "group_stats", "group_topk", "group_score",
-        "values", "distinct_values", "ids",
-    ):
+    coll = COLLECTORS.get(collector)
+    if coll is None:
+        *head, last = map(repr, COLLECTORS)
         raise ValueError(
-            "collector must be 'topk', 'count', 'stats', 'group_stats', "
-            "'group_topk', 'group_score', 'values', 'distinct_values' or "
-            f"'ids', got {collector!r}"
+            f"collector must be {', '.join(head)} or {last}, got {collector!r}"
         )
-    if group_meta is not None and collector not in (
-        "group_stats", "group_topk", "group_score",
-    ):
+    if group_meta is not None and coll.needs != "group_meta":
+        grouping = [n for n, c in COLLECTORS.items() if c.needs == "group_meta"]
         raise ValueError(
-            "group_meta is only valid with collector='group_stats'/"
-            "'group_topk'/'group_score'"
+            "group_meta is only valid with collector="
+            + "/".join(map(repr, grouping))
         )
     if offset < 0:
         raise ValueError(f"offset must be >= 0, got {offset}")
+    if group_k < 1:
+        raise ValueError(f"group_k must be >= 1, got {group_k}")
     if search_after is not None:
-        if collector != "topk":
+        if not coll.ranks:
             raise ValueError(
                 "search_after is only valid with collector='topk', "
                 f"got {collector!r}"
@@ -1445,111 +1509,26 @@ def wand_topk(
             search_after = {
                 qid: (-float(s), int(d)) for qid, (s, d) in search_after.items()
             }
-    if collector == "group_stats":
-        # bucketed aggregation over matched docs (the ES terms-agg /
-        # histogram shape): group_meta is the (doc_id, gcode) bucket
-        # assignment, sort_meta the optional sub-stats metric; exhaustive
-        # membership for the same reason counting is
-        if group_meta is None:
-            raise ValueError(
-                "collector='group_stats' needs group_meta as the "
-                "(doc_id, gcode) bucket source — use group_matches()"
-            )
-        if offset or sort_ascending:
-            raise ValueError(
-                "offset/sort_ascending are meaningless with "
-                "collector='group_stats'"
-            )
-        prune = False
-    if collector == "group_topk":
-        # per-bucket top hits (the ES top_hits sub-aggregation):
-        # group_meta is the bucket assignment, group_k the per-bucket
-        # hit count; exhaustive membership — pruning keeps only the
-        # GLOBAL top-k, which can starve a rare bucket's best hit
-        if group_meta is None:
-            raise ValueError(
-                "collector='group_topk' needs group_meta as the "
-                "(doc_id, gcode) bucket source — use top_hits_matches()"
-            )
-        if group_k < 1:
-            raise ValueError(f"group_k must be >= 1, got {group_k}")
-        if offset or sort_ascending:
-            raise ValueError(
-                "offset/sort_ascending are meaningless with "
-                "collector='group_topk'"
-            )
-        if sort_meta is not None:
-            raise ValueError(
-                "sort_meta is meaningless with collector='group_topk' — "
-                "hits rank by score"
-            )
-        prune = False
-    if collector == "group_score":
-        # parent-join score aggregation (the ES has_child shape):
-        # group_meta is the (doc_id, parent code) assignment; every
-        # matched child must contribute, so membership is exhaustive
-        if group_meta is None:
-            raise ValueError(
-                "collector='group_score' needs group_meta as the "
-                "(doc_id, gcode) parent source — use parent_matches()"
-            )
-        if offset or sort_ascending:
-            raise ValueError(
-                "offset/sort_ascending are meaningless with "
-                "collector='group_score'"
-            )
-        if sort_meta is not None:
-            raise ValueError(
-                "sort_meta is meaningless with collector='group_score' — "
-                "the aggregated value IS the child score"
-            )
-        prune = False
-    if collector == "count":
-        if offset:
-            raise ValueError("offset is meaningless with collector='count'")
-        if sort_meta is not None:
-            raise ValueError("sort_meta is meaningless with collector='count'")
-        prune = False  # exact totals need the exhaustive path (see docstring)
-    if collector == "ids":
-        # bare membership export: exhaustive for the same reason
-        # counting is; nothing to sort or page
-        if offset or sort_ascending:
-            raise ValueError("offset/sort_ascending are meaningless with collector='ids'")
-        if sort_meta is not None:
-            raise ValueError("sort_meta is meaningless with collector='ids'")
-        prune = False
-    elif collector in ("values", "distinct_values"):
-        # matched-value rows (the exact-percentile / cardinality feed):
-        # sort_meta is the (doc_id, value) source; exhaustive
-        # membership, as with every aggregation collector.
-        # 'distinct_values' additionally dedupes (query, value) pairs
-        # SHARD-LOCALLY before shipping (the map-side combine of a
-        # distinct-count — rows leave each shard bounded by the shard's
-        # distinct values, not its matches)
-        if sort_meta is None:
-            raise ValueError(
-                f"collector={collector!r} needs sort_meta as the "
-                "(doc_id, value) source — use percentile_matches() / "
-                "cardinality_matches()"
-            )
-        if offset or sort_ascending:
-            raise ValueError(
-                f"offset/sort_ascending are meaningless with collector={collector!r}"
-            )
-        prune = False
-    elif collector == "stats":
-        # metric aggregation over matched docs (the ES stats-agg shape):
-        # sort_meta is the (doc_id, value) source; exhaustive membership
-        # for the same reason counting is
-        if sort_meta is None:
-            raise ValueError(
-                "collector='stats' needs sort_meta as the (doc_id, value) "
-                "source — use aggregate_matches()"
-            )
-        if offset or sort_ascending:
-            raise ValueError(
-                "offset/sort_ascending are meaningless with collector='stats'"
-            )
+    side_inputs = {"sort_meta": sort_meta, "group_meta": group_meta}
+    if coll.needs is not None and side_inputs[coll.needs] is None:
+        raise ValueError(
+            f"collector={collector!r} needs {coll.needs} as the {coll.source}"
+        )
+    paging = {"offset": offset, "sort_ascending": sort_ascending}
+    if any(paging[a] for a in coll.rejects):
+        raise ValueError(
+            f"{'/'.join(coll.rejects)} {'is' if len(coll.rejects) == 1 else 'are'} "
+            f"meaningless with collector={collector!r}"
+        )
+    if sort_meta is not None and coll.no_sort is not None:
+        raise ValueError(
+            f"sort_meta is meaningless with collector={collector!r}{coll.no_sort}"
+        )
+    if not coll.ranks:
+        # aggregations need the complete matched set: exact totals and
+        # early termination are mutually exclusive (Lucene's
+        # trackTotalHits), and pruning keeps only the GLOBAL top-k, which
+        # can starve a rare bucket's best hit
         prune = False
     elif offset:
         # shard-local selection must keep enough candidates to survive
@@ -1567,7 +1546,7 @@ def wand_topk(
                 "sort_multiply needs sort_meta as the (doc_id, factor) "
                 "source — use function_score_topk()"
             )
-        if collector != "topk":
+        if not coll.ranks:
             raise ValueError(
                 "sort_multiply is only valid with collector='topk', "
                 f"got {collector!r}"
@@ -1584,7 +1563,7 @@ def wand_topk(
         # forced, exactly like counting
         prune = False
     if demote_sets is not None:
-        if collector != "topk":
+        if not coll.ranks:
             raise ValueError(
                 "demote_sets is only valid with collector='topk' — "
                 "demotion changes scores, not membership"
@@ -1892,7 +1871,7 @@ def wand_topk(
         cand_terms = sorted(cand_set)
         return _shard_and_rank(
             spark, merged, meta, tokenized, rows, cand_terms, keep_positions,
-            prune, shard_segments, deletes, mode, slop, doc_filter,
+            prune, deletes, mode, slop, doc_filter,
             fieldsets=fieldsets, offset=offset, collector=collector,
             sort_meta=sort_meta, sort_ascending=sort_ascending,
             group_meta=group_meta, search_after=search_after,
@@ -1953,12 +1932,38 @@ def wand_topk(
     cand_terms = sorted({t for r in rows for t in r[2]})
     return _shard_and_rank(
         spark, merged, meta, tokenized, rows, cand_terms, keep_positions,
-        prune, shard_segments, deletes, mode, slop, doc_filter,
+        prune, deletes, mode, slop, doc_filter,
         offset=offset, collector=collector,
         sort_meta=sort_meta, sort_ascending=sort_ascending,
         group_meta=group_meta, search_after=search_after,
         group_k=group_k, sort_multiply=sort_multiply,
         demote_sets=demote_sets, negative_boost=negative_boost,
+    )
+
+
+def _value_source(values):
+    """a (doc_id, value) frame cast to the side channel's (doc_id long,
+    sort_key double); a DocValues handle passes through (its shard tasks
+    read the stored field task-locally)"""
+    if isinstance(values, DocValues):
+        return values
+    return values.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col(values.columns[1]).cast("double").alias("sort_key"),
+    )
+
+
+def _matched_values(
+    spark, merged, tstats, meta, queries, values, kwargs, collector="values"
+) -> DataFrame:
+    """wand_topk over a metric source: the value-feed collectors behind
+    the ``*_matches`` aggregation wrappers (the wrapper owns collector
+    and sort_meta, so a caller's copies are dropped)"""
+    kwargs.pop("collector", None)
+    kwargs.pop("sort_meta", None)
+    return wand_topk(
+        spark, merged, tstats, meta, queries,
+        collector=collector, sort_meta=_value_source(values), **kwargs,
     )
 
 
@@ -2023,19 +2028,9 @@ def aggregate_matches(
     2 — ES emits NaN there; NULL is the SQL-comparable rendition), and
     ``std_upper`` / ``std_lower`` = avg ± sigma·std_deviation (ES
     std_deviation_bounds, default sigma 2)."""
-    kwargs.pop("collector", None)
-    kwargs.pop("sort_meta", None)
     if sigma < 0:
         raise ValueError(f"sigma must be >= 0, got {sigma}")
-    if not isinstance(values, DocValues):
-        values = values.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col(values.columns[1]).cast("double").alias("sort_key"),
-        )
-    out = wand_topk(
-        spark, merged, tstats, meta, queries,
-        collector="stats", sort_meta=values, **kwargs,
-    )
+    out = _matched_values(spark, merged, tstats, meta, queries, values, kwargs, "stats")
     if not extended:
         return out.drop("sum_of_squares")
     n = F.col("n_values")
@@ -2168,17 +2163,7 @@ def percentile_matches(
         )
     if len(set(pcts)) != len(pcts):
         raise ValueError(f"duplicate percentiles: {percentiles!r}")
-    kwargs.pop("collector", None)
-    kwargs.pop("sort_meta", None)
-    if not isinstance(values, DocValues):
-        values = values.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col(values.columns[1]).cast("double").alias("sort_key"),
-        )
-    vals = wand_topk(
-        spark, merged, tstats, meta, queries,
-        collector="values", sort_meta=values, **kwargs,
-    )
+    vals = _matched_values(spark, merged, tstats, meta, queries, values, kwargs)
     pct_arr = F.array(*[F.lit(p) for p in pcts])
     fold = (
         F.percentile(F.col("val"), pct_arr)
@@ -2224,17 +2209,7 @@ def boxplot_matches(
     Missing-value docs are skipped; all-missing queries emit no row."""
     if whisker_iqr < 0:
         raise ValueError(f"whisker_iqr must be >= 0, got {whisker_iqr}")
-    kwargs.pop("collector", None)
-    kwargs.pop("sort_meta", None)
-    if not isinstance(values, DocValues):
-        values = values.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col(values.columns[1]).cast("double").alias("sort_key"),
-        )
-    vals = wand_topk(
-        spark, merged, tstats, meta, queries,
-        collector="values", sort_meta=values, **kwargs,
-    )
+    vals = _matched_values(spark, merged, tstats, meta, queries, values, kwargs)
     w = Window.partitionBy("query_id")
     qs = F.percentile(F.col("val"), F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))).over(w)
     with_q = vals.select(
@@ -2412,17 +2387,7 @@ def mad_matches(
     median as an unordered window aggregate per query, then the outer
     median in the fold that shares the window's query_id partitioning.
     Missing-value docs skip; all-missing queries emit no row."""
-    kwargs.pop("collector", None)
-    kwargs.pop("sort_meta", None)
-    if not isinstance(values, DocValues):
-        values = values.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col(values.columns[1]).cast("double").alias("sort_key"),
-        )
-    vals = wand_topk(
-        spark, merged, tstats, meta, queries,
-        collector="values", sort_meta=values, **kwargs,
-    )
+    vals = _matched_values(spark, merged, tstats, meta, queries, values, kwargs)
     w = Window.partitionBy("query_id")
     med = F.percentile(F.col("val"), F.lit(0.5)).over(w)
     return (
@@ -2598,17 +2563,7 @@ def percentile_rank_matches(
         raise ValueError("at_values must be non-empty")
     if len(set(xs)) != len(xs):
         raise ValueError(f"duplicate at_values: {at_values!r}")
-    kwargs.pop("collector", None)
-    kwargs.pop("sort_meta", None)
-    if not isinstance(values, DocValues):
-        values = values.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col(values.columns[1]).cast("double").alias("sort_key"),
-        )
-    vals = wand_topk(
-        spark, merged, tstats, meta, queries,
-        collector="values", sort_meta=values, **kwargs,
-    )
+    vals = _matched_values(spark, merged, tstats, meta, queries, values, kwargs)
     at = F.broadcast(
         spark.createDataFrame([(x,) for x in xs], "at_value double")
     )
@@ -2780,16 +2735,8 @@ def cardinality_matches(
     deletes / doc_filter / field_meta. The ``k`` column is ignored."""
     if not 0.0 < rsd < 1.0:
         raise ValueError(f"rsd must be in (0, 1), got {rsd!r}")
-    kwargs.pop("collector", None)
-    kwargs.pop("sort_meta", None)
-    if not isinstance(values, DocValues):
-        values = values.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col(values.columns[1]).cast("double").alias("sort_key"),
-        )
-    vals = wand_topk(
-        spark, merged, tstats, meta, queries,
-        collector="distinct_values", sort_meta=values, **kwargs,
+    vals = _matched_values(
+        spark, merged, tstats, meta, queries, values, kwargs, "distinct_values"
     )
     fold = (
         F.count_distinct(F.col("val"))
@@ -2950,15 +2897,7 @@ def group_matches(
     kwargs.pop("sort_meta", None)
     kwargs.pop("group_meta", None)
     dim, gm = _encode_groups(spark, groups, max_buckets)
-    sm = None
-    if values is not None:
-        if isinstance(values, DocValues):
-            sm = values
-        else:
-            sm = values.select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.col(values.columns[1]).cast("double").alias("sort_key"),
-            )
+    sm = None if values is None else _value_source(values)
     out = wand_topk(
         spark, merged, tstats, meta, queries,
         collector="group_stats", group_meta=gm, sort_meta=sm, **kwargs,
@@ -3030,7 +2969,6 @@ def _shard_and_rank(
     cand_terms: list[str],
     keep_positions: bool,
     prune: bool,
-    shard_segments: int | None,
     deletes: DataFrame | None,
     mode: str,
     slop: int,
@@ -3048,9 +2986,11 @@ def _shard_and_rank(
     negative_boost: float | dict = 0.5,
 ) -> DataFrame:
     """shared execution tail for every mode: candidate-block In(term)
-    pushdown -> one shuffle by shard -> shard-local batch scoring ->
-    global per-query window top-k (collector="topk"; ranks
-    (offset, k]) or per-query matched-count sum (collector="count").
+    pushdown -> one shuffle by shard -> shard-local batch scoring, each
+    query's matches folded into the partial rows of
+    ``COLLECTORS[collector]`` -> that collector's driver-side reduce
+    (topk: the global per-query window, ranks (offset, k]; count: the
+    per-query sum; the aggregations: an associative merge or no reduce).
     See wand_topk's docstring.
 
     ``fieldsets`` (boolean mode): a (doc_id, leaf) frame — the resolved
@@ -3064,6 +3004,9 @@ def _shard_and_rank(
     reads its own segments' stored column task-locally (pyarrow,
     partition-pruned) — no per-batch metadata shuffle, the Lucene
     docvalues access pattern."""
+    coll = COLLECTORS[collector]
+    if not rows:
+        return spark.createDataFrame([], coll.result)
     dv_sort = sort_meta if isinstance(sort_meta, DocValues) else None
     if dv_sort is not None:
         sort_meta = None
@@ -3071,39 +3014,6 @@ def _shard_and_rank(
     if dv_group is not None:
         group_meta = None
     sorted_output = sort_meta is not None or dv_sort is not None
-    if not rows:
-        if collector == "count":
-            return spark.createDataFrame([], "query_id string, total_hits long")
-        if collector == "stats":
-            return spark.createDataFrame(
-                [],
-                "query_id string, n_docs long, n_values long, "
-                "sum double, min double, max double, avg double, "
-                "sum_of_squares double",
-            )
-        if collector == "group_stats":
-            return spark.createDataFrame(
-                [],
-                "query_id string, gcode long, n_docs long, n_values long, "
-                "sum double, min double, max double, avg double",
-            )
-        if collector == "group_score":
-            return spark.createDataFrame(
-                [],
-                "query_id string, gcode long, n_docs long, "
-                "sum double, min double, max double, avg double",
-            )
-        if collector in ("values", "distinct_values"):
-            return spark.createDataFrame([], _VALUES_SCHEMA)
-        if collector == "ids":
-            return spark.createDataFrame([], _IDS_SCHEMA)
-        if collector == "group_topk":
-            return spark.createDataFrame(
-                [],
-                "query_id string, gcode long, rank int, doc_id long, "
-                "score double",
-            )
-        return spark.createDataFrame([], "query_id string, rank int, doc_id long, score double")
     grouped = pd.DataFrame(
         rows, columns=["query_id", "k", "terms", "idfs", "nq", "phrase", "ast"]
     )
@@ -3168,20 +3078,18 @@ def _shard_and_rank(
         )
     b_qt = spark.sparkContext.broadcast(grouped)
 
-    if shard_segments is None:
-        # shard count is DATA-derived (~SHARD_TARGET_DOCS docs/shard), not
-        # cluster-derived: the same index answers the same query batch
-        # with the same physical work at every cluster size, so adding
-        # executors divides wall time instead of multiplying per-shard
-        # fixed cost (the round-5 scaling finding: parallelism-derived
-        # shards made the 4x cluster do 4x the per-query fold setups).
-        # The 2x-parallelism floor only binds when the corpus is small
-        # relative to the cluster — scoring parallelism then still covers
-        # every core.
-        n_segments = max(1, (meta.n_docs + meta.segment_docs - 1) // meta.segment_docs)
-        par = spark.sparkContext.defaultParallelism
-        target_shards = max(par * 2, -(-meta.n_docs // SHARD_TARGET_DOCS))
-        shard_segments = max(1, n_segments // target_shards)
+    # shard count is DATA-derived (~SHARD_TARGET_DOCS docs/shard), not
+    # cluster-derived: the same index answers the same query batch with
+    # the same physical work at every cluster size, so adding executors
+    # divides wall time instead of multiplying per-shard fixed cost (the
+    # round-5 scaling finding: parallelism-derived shards made the 4x
+    # cluster do 4x the per-query fold setups). The 2x-parallelism floor
+    # only binds when the corpus is small relative to the cluster —
+    # scoring parallelism then still covers every core.
+    n_segments = max(1, (meta.n_docs + meta.segment_docs - 1) // meta.segment_docs)
+    par = spark.sparkContext.defaultParallelism
+    target_shards = max(par * 2, -(-meta.n_docs // SHARD_TARGET_DOCS))
+    shard_segments = max(1, n_segments // target_shards)
     cand = merged.filter(F.col("term").isin(cand_terms))
     if not keep_positions and "pos_bin" in cand.columns:
         # positions roughly double a positional index's block bytes and
@@ -3243,63 +3151,68 @@ def _shard_and_rank(
         )
         side = gd if side is None else side.unionByName(gd)
 
-    count_only = collector == "count"
-    stats_only = collector == "stats"
-    group_only = collector == "group_stats"
-    group_score_only = collector == "group_score"
-    values_only = collector in ("values", "distinct_values")
-    values_unique = collector == "distinct_values"
-    group_topk_n = group_k if collector == "group_topk" else None
-    sort_mult = bool(sort_multiply)
-    ids_only = collector == "ids"
-    out_schema = (
-        _COUNT_SCHEMA if count_only
-        else _STATS_SCHEMA if stats_only
-        else _GROUP_SCHEMA if group_only
-        else _GROUP_SCORE_SCHEMA if group_score_only
-        else _VALUES_SCHEMA if values_only
-        else _GROUP_TOPK_SCHEMA if group_topk_n is not None
-        else _IDS_SCHEMA if ids_only
-        else _OUT_SCHEMA
-    )
-
     # docvalues reads happen INSIDE the shard task: segments
     # [shard*G, (shard+1)*G) are this task's blocks by construction, so
     # the pruned parquet read touches exactly the task's own rows —
     # no shuffle ever carries the field
-    _g = shard_segments
-    _neg = bool(sort_ascending)
-
     def _dv_keys(dv, shard):
-        if dv is None:
-            return None
-        r = read_segment_values(dv.data_path, int(shard) * _g, (int(shard) + 1) * _g)
-        if r is not None and dv is dv_sort and _neg:
+        r = read_segment_values(
+            dv.data_path, int(shard) * shard_segments, (int(shard) + 1) * shard_segments
+        )
+        if r is not None and dv is dv_sort and sort_ascending:
             # the DataFrame path negates ascending keys driver-side;
             # the dv path negates after the task-local read — same
             # largest-first selection, same final un-negate
             r = (r[0], -r[1])
         return r
 
+    has_base = allow or deletes is not None  # leaf -1 rows mask postings
+
+    def score_shard(key, pdf, ids):
+        """one shard task: ``ids`` is the shard's side-channel rows, or
+        None when the batch has no side channel"""
+        base, fsets, skeys, gkeys = None, {}, None, None
+        if ids is not None:
+            leaves = ids["leaf"].to_numpy(dtype=np.int64)
+            docs = ids["doc_id"].to_numpy(dtype=np.int64)
+            # leaf == -1 is the base tombstone/allow set; -2 tags sort
+            # keys and metric values, -3 bucket codes (never membership);
+            # >= 0 are field-leaf docID sets
+            if has_base:
+                base = np.sort(np.unique(docs[leaves == -1]))
+            fsets = {
+                int(l): np.sort(np.unique(docs[leaves == l]))
+                for l in np.unique(leaves[leaves >= 0])
+            }
+            vals = ids["val"].to_numpy(dtype=np.float64)
+
+            def keyed(tag):
+                sel = leaves == tag
+                if not sel.any():
+                    return None
+                o = np.argsort(docs[sel], kind="stable")
+                return docs[sel][o], vals[sel][o]
+
+            skeys, gkeys = keyed(-2), keyed(-3)
+        if dv_sort is not None:
+            skeys = _dv_keys(dv_sort, key[0])
+        if dv_group is not None:
+            gkeys = _dv_keys(dv_group, key[0])
+        return _score_shard_multi(
+            pdf, b_qt.value, avgdl, prune,
+            deleted=None if allow else base, mode=mode, slop=slop,
+            allowed=base if allow else None, field_sets=fsets,
+            collector=collector,
+            sort_keys=None if sort_multiply else skeys,
+            group_keys=gkeys,
+            factors=skeys if sort_multiply else None,
+            group_k=group_k,
+        )
+
     if side is None:
-
-        def fn(key, pdf):
-            return _score_shard_multi(
-                pdf, b_qt.value, avgdl, prune, mode=mode, slop=slop,
-                count_only=count_only,
-                sort_keys=_dv_keys(dv_sort, key[0]),
-                stats_only=stats_only,
-                group_keys=_dv_keys(dv_group, key[0]),
-                group_only=group_only,
-                values_only=values_only,
-                values_unique=values_unique,
-                group_topk_n=group_topk_n,
-                sort_mult=sort_mult,
-                ids_only=ids_only,
-                group_score_only=group_score_only,
-            )
-
-        local = cand.groupBy("shard").applyInPandas(fn, schema=out_schema)
+        local = cand.groupBy("shard").applyInPandas(
+            lambda key, pdf: score_shard(key, pdf, None), schema=coll.partial
+        )
     else:
         # a doc's shard is a pure function of its docID (segment_id =
         # doc_id // segment_docs), so the docID set (tombstones, an
@@ -3309,214 +3222,11 @@ def _shard_and_rank(
         side = side.withColumn(
             "shard", (F.col("doc_id") / F.lit(docs_per_shard)).cast("long")
         )
-        has_base = allow or deletes is not None
-
-        def fn2(key, pdf, ids):
-            if len(pdf) == 0:
-                if count_only:
-                    return pd.DataFrame({"query_id": [], "n": []})
-                if stats_only:
-                    return pd.DataFrame(
-                        {c: [] for c in
-                         ("query_id", "n_docs", "n_vals",
-                          "vsum", "vmin", "vmax", "vsumsq")}
-                    )
-                if group_only:
-                    return pd.DataFrame(
-                        {c: [] for c in
-                         ("query_id", "gcode", "n_docs", "n_vals",
-                          "vsum", "vmin", "vmax")}
-                    )
-                if group_score_only:
-                    return pd.DataFrame(
-                        {c: [] for c in
-                         ("query_id", "gcode", "n_docs",
-                          "ssum", "smin", "smax")}
-                    )
-                if values_only:
-                    return pd.DataFrame({"query_id": [], "val": []})
-                if group_topk_n is not None:
-                    return pd.DataFrame(
-                        {c: [] for c in
-                         ("query_id", "gcode", "doc_id", "score")}
-                    )
-                if ids_only:
-                    return pd.DataFrame({"query_id": [], "doc_id": []})
-                return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-            leaves = ids["leaf"].to_numpy(dtype=np.int64)
-            docs = ids["doc_id"].to_numpy(dtype=np.int64)
-            # leaf == -1 is the base tombstone/allow set; -2 tags sort
-            # keys and metric values, -3 bucket codes (never membership);
-            # >= 0 are field-leaf docID sets
-            arr = np.sort(np.unique(docs[leaves == -1]))
-            fsets = {
-                int(l): np.sort(np.unique(docs[leaves == l]))
-                for l in np.unique(leaves[leaves >= 0])
-            }
-            skeys = None
-            smask = leaves == -2
-            if smask.any():
-                sdocs = docs[smask]
-                svals = ids["val"].to_numpy(dtype=np.float64)[smask]
-                o = np.argsort(sdocs, kind="stable")
-                skeys = (sdocs[o], svals[o])
-            gkeys = None
-            gmask = leaves == -3
-            if gmask.any():
-                gdocs = docs[gmask]
-                gvals = ids["val"].to_numpy(dtype=np.float64)[gmask]
-                o = np.argsort(gdocs, kind="stable")
-                gkeys = (gdocs[o], gvals[o])
-            if dv_sort is not None:
-                skeys = _dv_keys(dv_sort, key[0])
-            if dv_group is not None:
-                gkeys = _dv_keys(dv_group, key[0])
-            return _score_shard_multi(
-                pdf,
-                b_qt.value,
-                avgdl,
-                prune,
-                deleted=arr if (has_base and not allow) else None,
-                mode=mode,
-                slop=slop,
-                allowed=arr if allow else None,
-                field_sets=fsets,
-                count_only=count_only,
-                sort_keys=skeys,
-                stats_only=stats_only,
-                group_keys=gkeys,
-                group_only=group_only,
-                values_only=values_only,
-                values_unique=values_unique,
-                group_topk_n=group_topk_n,
-                sort_mult=sort_mult,
-                ids_only=ids_only,
-                group_score_only=group_score_only,
-            )
-
         local = (
             cand.groupby("shard")
             .cogroup(side.groupby("shard"))
-            .applyInPandas(fn2, schema=out_schema)
+            .applyInPandas(score_shard, schema=coll.partial)
         )
-    if ids_only:
-        # bare membership rows; shards partition docs, so pairs are
-        # already distinct — no reduce at all
-        return local
-    if values_only:
-        # one row per (query, matched doc with a value) — the caller
-        # (percentile_matches) owns the order-statistics fold; shards
-        # are disjoint so no dedup is needed
-        return local
-    if count_only:
-        # shard-local matched counts are disjoint by construction (a
-        # doc's postings live in exactly one shard), so the global total
-        # is a plain sum — no rank window, no k
-        return local.groupBy("query_id").agg(
-            F.sum("n").cast("long").alias("total_hits")
-        )
-    if stats_only:
-        # shard partials fold associatively (disjoint doc sets); the
-        # empty-fold identities (+inf/-inf/0) vanish under min/max/sum,
-        # and an all-missing query NULLs its value stats. avg is
-        # sum/count (not a running mean) so integer-valued metrics stay
-        # exact; float sums are shard-fold-order deterministic but the
-        # cross-shard fold is Spark's — ULP tolerance applies, as with
-        # every distributed double sum in this repo.
-        agg = local.groupBy("query_id").agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_vals").cast("long").alias("n_values"),
-            F.sum("vsum").alias("sum"),
-            F.min("vmin").alias("min"),
-            F.max("vmax").alias("max"),
-            F.sum("vsumsq").alias("sumsq"),
-        )
-        has = F.col("n_values") > 0
-        return agg.select(
-            "query_id",
-            "n_docs",
-            "n_values",
-            F.when(has, F.col("sum")).alias("sum"),
-            F.when(has, F.col("min")).alias("min"),
-            F.when(has, F.col("max")).alias("max"),
-            F.when(has, F.col("sum") / F.col("n_values")).alias("avg"),
-            F.when(has, F.col("sumsq")).alias("sum_of_squares"),
-        )
-    if group_only:
-        # same associative fold as stats, keyed by (query, bucket code);
-        # the bucket count is facet-cardinality bounded so this groupBy
-        # is a narrow-frame shuffle, never corpus-sized
-        agg = local.groupBy("query_id", "gcode").agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_vals").cast("long").alias("n_values"),
-            F.sum("vsum").alias("sum"),
-            F.min("vmin").alias("min"),
-            F.max("vmax").alias("max"),
-        )
-        has = F.col("n_values") > 0
-        return agg.select(
-            "query_id",
-            "gcode",
-            "n_docs",
-            "n_values",
-            F.when(has, F.col("sum")).alias("sum"),
-            F.when(has, F.col("min")).alias("min"),
-            F.when(has, F.col("max")).alias("max"),
-            F.when(has, F.col("sum") / F.col("n_values")).alias("avg"),
-        )
-    if group_score_only:
-        # parent-score fold keyed by (query, parent code): the same
-        # associative merge as group_stats, but over child SCORES. The
-        # partial volume is bounded by matched parents (x the rare
-        # shard-straddling conversation), so this groupBy shuffles a
-        # match-bounded frame, never the corpus. min/max fold exactly;
-        # sum (and avg = sum/count) carries the usual cross-shard
-        # double-fold ULP tolerance.
-        agg = local.groupBy("query_id", "gcode").agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("ssum").alias("sum"),
-            F.min("smin").alias("min"),
-            F.max("smax").alias("max"),
-        )
-        return agg.select(
-            "query_id",
-            "gcode",
-            "n_docs",
-            "sum",
-            "min",
-            "max",
-            (F.col("sum") / F.col("n_docs")).alias("avg"),
-        )
-    if group_topk_n is not None:
-        # shard-local phases shipped <= n rows per (query, bucket) each;
-        # the global cut is a window over that bounded frame (shards x
-        # buckets x n), partitioned by the bucket key — never corpus
-        wg = Window.partitionBy("query_id", "gcode").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        return (
-            local.withColumn("rank", F.row_number().over(wg))
-            .filter(F.col("rank") <= F.lit(group_topk_n))
-            .select("query_id", "gcode", "rank", "doc_id", "score")
-        )
-    kdf = spark.createDataFrame(
-        [(qid, k) for qid, k, _, _ in tokenized], schema="query_id string, k int"
+    return coll.reduce(
+        local, _Tail(spark, tokenized, offset, group_k, sorted_output and sort_ascending)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = (
-        local.join(F.broadcast(kdf), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-    )
-    if offset:
-        # k was inflated by the offset driver-side; the page is the
-        # global-rank window (offset, k]. rank stays GLOBAL so
-        # consecutive pages tile the unpaged ranking exactly.
-        out = out.filter(F.col("rank") > F.lit(offset))
-    if sorted_output and sort_ascending:
-        # keys were negated on the way in so the shared largest-first
-        # selection could run unchanged; hand back the true key. A doc
-        # missing its key came through as -inf and flips to +inf —
-        # still "missing sorts last" under the ascending order
-        out = out.withColumn("score", -F.col("score"))
-    return out.select("query_id", "rank", "doc_id", "score")
