@@ -12,7 +12,10 @@ read passes — no read infers a schema):
     segments/segment_id=K/*.parquet      encoded block rows, one dir per segment
     lineage/*.parquet                     (partition_id, doc_count, term_count,
                                            bytes, wall_ms, commit_ts,
-                                           token_count) per segment commit
+                                           token_count) per segment commit;
+                                          the facts are observed on the
+                                          segment write job itself
+                                          (spimi.write_segments)
     merged/*.parquet                      final queryable layout, flat files:
                                           rows hash-spread by (term, block
                                           chunk), each file sorted by (term,
@@ -45,7 +48,7 @@ from angle_spark import fsio
 
 from angle_spark.codec import BLOCK_SIZE
 from angle_spark.index import schema
-from angle_spark.index.spimi import build_segments
+from angle_spark.index.spimi import write_segments
 from angle_spark.index.stats import corpus_stats
 
 # the IndexMeta.n_buckets default: every meta carries the key, nothing
@@ -159,6 +162,44 @@ def _read_table(spark: SparkSession, path: str, fmt: str, ddl: str) -> DataFrame
 
 def _lineage_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "lineage")
+
+
+def _commit_lineage(
+    spark: SparkSession,
+    out_dir: str,
+    fmt: str,
+    doc_counts: dict,
+    stats: dict,
+    wall_ms: int,
+) -> None:
+    """Append one lineage row per segment of ``doc_counts`` (segment_id
+    -> docs this commit added to it), with the facts
+    ``spimi.write_segments`` observed for it; a segment without blocks
+    (no doc of it has a token) commits zero terms, bytes and tokens."""
+
+    def fact(s, name):
+        return int(stats[s][name]) if s in stats else 0
+
+    rows = [
+        (s, n, fact(s, "term_count"), fact(s, "bytes"), wall_ms, fact(s, "token_count"))
+        for s, n in doc_counts.items()
+    ]
+    lineage = spark.createDataFrame(
+        rows,
+        schema=(
+            "partition_id long, doc_count long, term_count long, "
+            "bytes long, wall_ms long, token_count long"
+        ),
+    ).withColumn("commit_ts", F.current_timestamp())
+    _write(
+        lineage.select(
+            "partition_id", "doc_count", "term_count", "bytes", "wall_ms",
+            "commit_ts", "token_count",
+        ),
+        _lineage_dir(out_dir),
+        fmt,
+        "append",
+    )
 
 
 def committed_segments(
@@ -283,82 +324,30 @@ def build_index(
         t0 = time.monotonic()
         lo_ids = F.col("doc_id") / F.lit(segment_docs)
         batch_docs = docs.filter(lo_ids.cast("long").isin(batch))
-        blocks = build_segments(
-            batch_docs, avgdl, segment_docs, block_size, positional
-        )
-        # write STRAIGHT from the applyInArrow output: each grouped task
-        # already holds whole segments (the groupBy(segment_id) shuffle IS
-        # the partitioning), so the old repartition(segment_id) was a
-        # second full shuffle of the encoded bytes (guide §2.4 — two ops
-        # keyed the same way share one exchange). The leading segment_id
-        # sort key keeps one open file per partition dir during the
-        # dynamic-partition write; (term, block_in_seg) after it preserves
-        # the row-group min/max term stats the query scan prunes on.
-        _write(
-            blocks.sortWithinPartitions("segment_id", "term", "block_in_seg"),
-            seg_dir,
-            sink_format,
-            "overwrite",
-            partition_by=["segment_id"],
+        # one pass encodes and writes the batch and observes each
+        # segment's lineage facts on the way (spimi.write_segments): no
+        # re-read of the committed blocks. Only this batch's segments
+        # are written, so the facts are exactly this commit's; their
+        # last_doc maximum is also the max-doc watermark merge_index
+        # would otherwise re-scan for.
+        stats = write_segments(
+            batch_docs, avgdl, segment_docs, block_size, positional,
+            seg_dir, sink_format, "overwrite",
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
-
-        # lineage from the COMMITTED batch partitions: a column-pruned
-        # re-read is far cheaper than persisting the block frame was (the
-        # old .persist() built a columnar cache of the binary payloads —
-        # ~26s at sf0.1, measured r6; this scan re-reads the batch once).
-        # Collected driver-side (bounded: one row per batch segment) so
-        # the same pass also yields the max-doc watermark merge_index
-        # would otherwise re-scan for, and the doc-count attach is a dict
-        # lookup instead of a join stage.
-        lin_rows = (
-            _read_table(spark, seg_dir, sink_format, schema.BLOCKS)
-            .filter(F.col("segment_id").isin(batch))
-            .groupBy("segment_id")
-            .agg(
-                F.count_distinct("term").alias("term_count"),
-                F.sum(
-                    F.octet_length("docs_bin")
-                    + F.octet_length("tfs_bin")
-                    + F.octet_length("dls_bin")
-                    + F.octet_length("pos_bin")
-                ).alias("bytes"),
-                F.sum("sum_tf").alias("token_count"),
-                F.max("last_doc").alias("hi"),
-            )
-            .collect()
+        for st in stats.values():
+            if built_hi is None or st["hi"] > built_hi:
+                built_hi = int(st["hi"])
+        _commit_lineage(
+            spark, out_dir, sink_format,
+            {s: seg_counts.get(s, 0) for s in batch}, stats, wall_ms,
         )
-        by_seg = {r["segment_id"]: r for r in lin_rows}
-        for r in lin_rows:
-            if r["hi"] is not None and (built_hi is None or r["hi"] > built_hi):
-                built_hi = int(r["hi"])
-        lineage_rows = spark.createDataFrame(
-            [
-                (
-                    s,
-                    seg_counts.get(s, 0),
-                    int(by_seg[s]["term_count"]) if s in by_seg else 0,
-                    int(by_seg[s]["bytes"]) if s in by_seg else 0,
-                    wall_ms,
-                    int(by_seg[s]["token_count"]) if s in by_seg else 0,
-                )
-                for s in batch
-            ],
-            schema=(
-                "partition_id long, doc_count long, term_count long, "
-                "bytes long, wall_ms long, token_count long"
-            ),
-        ).withColumn("commit_ts", F.current_timestamp()).select(
-            "partition_id", "doc_count", "term_count", "bytes", "wall_ms",
-            "commit_ts", "token_count",
-        )
-        _write(lineage_rows, _lineage_dir(out_dir), sink_format, "append")
         batches += 1
         if fail_after_batches is not None and batches >= fail_after_batches:
             raise RuntimeError(f"injected failure after {batches} batches")
 
-    # a fresh, uninterrupted build saw every block's last_doc in its
-    # lineage aggs — merge_index can skip its own watermark scan. A
+    # a fresh, uninterrupted build observed every block's last_doc on its
+    # segment writes — merge_index can skip its own watermark scan. A
     # resumed build (done != empty) only saw the new batches; merge
     # recomputes. -1 encodes "complete but empty" (no blocks at all).
     if not done:

@@ -323,6 +323,19 @@ def _segment_blocks_arrow(tbl, avgdl: float, block_size: int, positional: bool =
     )
 
 
+def _by_segment(docs: DataFrame, segment_docs: int):
+    """docs(doc_id, tokens, dl) grouped by their segment: uniform
+    doc-count slices, so the shuffle is unskewed regardless of term skew
+    (skew shows up only as bigger posting lists *within* a segment,
+    which blocks cap at block_size docs each)."""
+    return docs.select(
+        "doc_id",
+        "tokens",
+        "dl",
+        (F.col("doc_id") / F.lit(segment_docs)).cast("long").alias("segment_id"),
+    ).groupBy("segment_id")
+
+
 def build_segments(
     docs: DataFrame,
     avgdl: float,
@@ -333,26 +346,104 @@ def build_segments(
     """docs(doc_id, tokens, dl) -> encoded block rows.
 
     groupBy(segment_id).applyInArrow gives each segment to exactly one
-    task; segments are uniform doc-count slices so the shuffle is unskewed
-    regardless of term skew (skew shows up only as bigger posting lists
-    *within* a segment, which blocks cap at block_size docs each).
-
-    The per-segment encoder is the Arrow rendition (_segment_blocks_arrow)
-    — value-identical to the pandas rendition (_segment_blocks, kept as
-    the cross-checked reference), without ever materializing the token
-    strings as Python objects (guide §4).
+    task. The per-segment encoder is the Arrow rendition
+    (_segment_blocks_arrow) — value-identical to the pandas rendition
+    (_segment_blocks, kept as the cross-checked reference), without ever
+    materializing the token strings as Python objects (guide §4).
     """
 
     def fn(key, tbl):
         return _segment_blocks_arrow(tbl, avgdl, block_size, positional)
 
-    with_seg = docs.select(
-        "doc_id",
-        "tokens",
-        "dl",
-        (F.col("doc_id") / F.lit(segment_docs)).cast("long").alias("segment_id"),
+    return _by_segment(docs, segment_docs).applyInArrow(fn, schema=schema.BLOCKS)
+
+
+# per-segment lineage facts, known to the encoder once a segment's
+# blocks exist; hi is the segment's largest docID with a token
+_STATS_FIELDS = ("segment_id", "term_count", "bytes", "token_count", "hi")
+_SEG_STATS = ", ".join(f"{f}: bigint" for f in _STATS_FIELDS)
+
+
+def _with_segment_stats(blocks):
+    """``blocks`` (one segment's encoder output) plus a ``seg_stats``
+    struct column: the segment's stats on the first row, null on the
+    rest — so one collect_list over the column yields one struct per
+    segment, at a per-row cost that does not grow with the segment count."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    typ = pa.struct([(f, pa.int64()) for f in _STATS_FIELDS])
+    n = blocks.num_rows
+    if not n:
+        return blocks.append_column("seg_stats", pa.nulls(0, typ))
+    bins = ("docs_bin", "tfs_bin", "dls_bin", "pos_bin")
+    first = (
+        blocks.column("segment_id")[0].as_py(),
+        # a term's blocks are numbered 0.. within its segment
+        pc.sum(pc.equal(blocks.column("block_in_seg"), 0)).as_py(),
+        sum(pc.sum(pc.binary_length(blocks.column(c))).as_py() or 0 for c in bins),
+        pc.sum(blocks.column("sum_tf")).as_py(),
+        pc.max(blocks.column("last_doc")).as_py(),
     )
-    return with_seg.groupBy("segment_id").applyInArrow(fn, schema=schema.BLOCKS)
+    kids = [pa.array(np.r_[v, np.zeros(n - 1, dtype=np.int64)]) for v in first]
+    null = np.ones(n, dtype=bool)
+    null[0] = False
+    stats = pa.StructArray.from_arrays(kids, fields=list(typ), mask=pa.array(null))
+    return blocks.append_column("seg_stats", stats)
+
+
+def write_segments(
+    docs: DataFrame,
+    avgdl: float,
+    segment_docs: int,
+    block_size: int,
+    positional: bool,
+    path: str,
+    fmt: str,
+    mode: str,
+) -> dict:
+    """Encode docs(doc_id, tokens, dl) into segment blocks, write them
+    under ``path`` partitioned by segment_id, and return the lineage
+    facts of every segment written: ``{segment_id: Row(segment_id,
+    term_count, bytes, token_count, hi)}``.
+
+    The facts come back from the write job itself: the encoder attaches
+    them to each segment's first block row, a Spark ``Observation``
+    collects them as the rows stream into the writer, and the column is
+    dropped before it reaches the files. So the tokenize and encode run
+    once per write — no re-read of the committed files and no second
+    execution of the encode to aggregate lineage. A segment whose docs
+    have no tokens writes no blocks and has no entry (its facts are 0).
+    A task retry re-observes the same deterministic struct, so the map
+    keyed by segment_id is exact either way."""
+    from pyspark.sql import Observation
+
+    from angle_spark.index.build import _write
+
+    def fn(key, tbl):
+        return _with_segment_stats(_segment_blocks_arrow(tbl, avgdl, block_size, positional))
+
+    blocks = _by_segment(docs, segment_docs).applyInArrow(
+        fn, schema=f"{schema.BLOCKS}, seg_stats struct<{_SEG_STATS}>"
+    )
+    obs = Observation()
+    observed = blocks.observe(obs, F.collect_list("seg_stats").alias("seg_stats"))
+    # write STRAIGHT from the applyInArrow output: each grouped task
+    # already holds whole segments (the groupBy(segment_id) shuffle IS
+    # the partitioning). The leading segment_id sort key keeps one open
+    # file per partition dir during the dynamic-partition write;
+    # (term, block_in_seg) after it preserves the row-group min/max term
+    # stats the query scan prunes on.
+    _write(
+        observed.drop("seg_stats").sortWithinPartitions(
+            "segment_id", "term", "block_in_seg"
+        ),
+        path,
+        fmt,
+        mode,
+        partition_by=["segment_id"],
+    )
+    return {int(r["segment_id"]): r for r in obs.get["seg_stats"]}
 
 
 def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -58,6 +57,15 @@ def assign_doc_ids(
     0..N-1, all distinct — the FIRST time each Spark version is seen in
     this process; True forces it, False skips (the probe is one agg over
     the result frame, cheap but not free)."""
+    return assign_doc_ids_counted(df, num_partitions, validate)[0]
+
+
+def assign_doc_ids_counted(
+    df: DataFrame, num_partitions: int | None = None, validate: bool | str = "auto"
+) -> tuple[DataFrame, int]:
+    """:func:`assign_doc_ids` plus the row count of ``df``, which pass 1
+    learns for free (the sum of the per-partition turn totals) — a
+    caller that needs both submits no count job of its own."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -65,10 +73,15 @@ def assign_doc_ids(
     # per-conv turn counts: a column-pruned scan + map-side-combined agg
     # (shuffle volume = #convs rows, never the corpus)
     counts = df.groupBy("conv_id").agg(F.count(F.lit(1)).alias("_n"))
+    # a local checkpoint (2 longs/conv — tiny) pins the partitions'
+    # content and order for both passes; unlike a persist it registers
+    # nothing in the cache manager, so a later assignment of the same
+    # input recomputes instead of hitting a stale cache entry, and the
+    # blocks are freed with the frame (ContextCleaner)
     parted = (
         counts.repartitionByRange(num_partitions, "conv_id")
         .sortWithinPartitions("conv_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # 2 longs/conv — tiny
+        .localCheckpoint(eager=False)
     )
     # pass 1: per-partition turn totals — P longs to the driver, never data
     prows = (
@@ -85,8 +98,8 @@ def assign_doc_ids(
         acc += psums.get(pid, 0) or 0
     b_bases = spark.sparkContext.broadcast(bases)
 
-    # pass 2: task-local running prefix over the SAME persisted partitions
-    # (persist pins content and order, so the prefix is deterministic)
+    # pass 2: task-local running prefix over the SAME checkpointed
+    # partitions (content and order pinned, so the prefix is deterministic)
     def _cum(it):
         from pyspark import TaskContext
 
@@ -142,13 +155,7 @@ def assign_doc_ids(
                 f"(n={n}, max={probe['mx']}, distinct={probe['nd']})"
             )
         _LAYOUT_VALIDATED.add(spark.version)
-    # cleanup handle: the persisted per-conv counts frame backing the
-    # offsets (O(#convs) narrow rows). Long-lived callers that assign ids
-    # repeatedly (the streaming micro-batch sink) unpersist it once their
-    # downstream writes have materialized; one-shot batch callers may
-    # leave it to the ContextCleaner as before.
-    result._persisted_source = parted  # type: ignore[attr-defined]
-    return result
+    return result, acc  # acc ends as the sum over every partition
 
 
 def assign_doc_ids_window(df: DataFrame) -> DataFrame:

@@ -115,6 +115,9 @@ def _member(kdocs: np.ndarray | None, doc_ids: np.ndarray):
     return hit, pos[hit]
 
 
+_NO_KEYS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+
+
 def _lookup(keys, doc_ids: np.ndarray):
     """-> (mask of the doc_ids that carry a key, their keys in doc order);
     ``keys`` is a doc-ascending (docs, values) pair or None."""
@@ -3196,6 +3199,10 @@ def _shard_and_rank(
             skeys, gkeys = keyed(-2), keyed(-3)
         if dv_sort is not None:
             skeys = _dv_keys(dv_sort, key[0])
+        if skeys is None and sorted_output and not sort_multiply:
+            # a shard none of whose docs has a key still sorts by the
+            # field: every doc there is "missing" and sorts last
+            skeys = _NO_KEYS
         if dv_group is not None:
             gkeys = _dv_keys(dv_group, key[0])
         return _score_shard_multi(

@@ -9,23 +9,29 @@ index via foreachBatch, with dropDuplicatesWithinWatermark on
 
 Delta segments reuse the SPIMI builder: a micro-batch's turns get docIDs
 above the current high-water mark, become one-or-more new segments, and
-land with the same lineage rows the batch build writes — so resume,
-merge, and the WAND scorer treat streamed segments identically to batch
-ones. Queries see the union of merged/ plus any committed delta segments.
+land with the same lineage rows the batch build writes, in the index's
+sink format — so resume, merge, and the WAND scorer treat streamed
+segments identically to batch ones. A micro-batch runs its docID
+assignment over per-conversation counts, which also counts the batch,
+and then ONE pass over the batch that joins the docIDs, tokenizes,
+encodes and writes, observing the lineage facts on the way
+(spimi.write_segments). Queries see the union of merged/ plus any committed delta segments.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from angle_spark.index.build import IndexMeta
-from angle_spark.index.spimi import build_segments
+from angle_spark.index.build import IndexMeta, _commit_lineage
+from angle_spark.index.spimi import write_segments
 from angle_spark.index.stats import with_tokens
+from angle_spark.operators.docids import assign_doc_ids_counted
 
 
 def _load_meta(spark, out_dir: str) -> IndexMeta:
@@ -43,8 +49,6 @@ def append_micro_batch(
     delta segment blocks, append to segments/ + lineage. Returns the new
     high-water mark. Stats (df, avgdl) are refreshed by the next
     merge_index run — standard segment-then-merge search maintenance."""
-    import time
-
     t0 = time.monotonic()
     spark = batch_df.sparkSession
     meta = _load_meta(spark, out_dir)
@@ -54,107 +58,47 @@ def append_micro_batch(
     # docIDs via the two-pass offset-prefix assigner (operators/docids.py)
     # shifted above the high-water mark — a large backfill micro-batch
     # parallelizes like the batch build instead of serializing on one
-    # unpartitioned-window task (round-3 verdict item)
-    from angle_spark.operators.docids import assign_doc_ids
-
-    from pyspark import StorageLevel
-
-    assigned = assign_doc_ids(rows)
+    # unpartitioned-window task. Its pass 1 already counted the batch.
+    assigned, n_new = assign_doc_ids_counted(rows)
+    if n_new == 0:
+        return high_water_doc
     ids = assigned.withColumn(
         "doc_id", (F.col("doc_id") + F.lit(high_water_doc)).cast("long")
     )
-    # one tokenize pass per micro-batch: the count below materializes the
-    # persist, the encode+write and lineage agg read it back (the
-    # round-5 shape recomputed the docids+tokenize chain for the count,
-    # the write, the lineage agg AND a per-segment doc-count job — 4
-    # executions per batch; guide §5. Doc counts are arithmetic now.)
-    docs = with_tokens(ids).select("doc_id", "tokens", "dl").persist(
-        StorageLevel.DISK_ONLY
+    docs = with_tokens(ids).select("doc_id", "tokens", "dl")
+    # NOTE: blocks built here encode max_impact with the BUILD-TIME
+    # meta.avgdl, which drifts as the stream appends — the stored
+    # max_impact column is ADVISORY across batch/streamed segments and the
+    # query side (query/wand.py) recomputes bounds from (max_tf, min_dl)
+    # with the current avgdl; never prune on the stored column directly.
+    #
+    # One pass runs the docID join, the tokenizer, the encode and the
+    # write, and observes the lineage facts on the way. They come from
+    # the write itself, never from aggregating committed files: this
+    # sink APPENDS, so a foreachBatch re-execution after a crash leaves
+    # the crashed attempt's orphan files behind, which a re-read would
+    # double-count.
+    stats = write_segments(
+        docs, meta.avgdl, meta.segment_docs, meta.block_size, meta.positional,
+        os.path.join(out_dir, "segments"), meta.sink_format, "append",
     )
-    try:
-        n_new = docs.count()
-        if n_new == 0:
-            return high_water_doc
-        # NOTE: blocks built here encode max_impact with the BUILD-TIME
-        # meta.avgdl, which drifts as the stream appends — the stored
-        # max_impact column is ADVISORY across batch/streamed segments and the
-        # query side (query/wand.py) recomputes bounds from (max_tf, min_dl)
-        # with the current avgdl; never prune on the stored column directly.
-        blocks = build_segments(
-            docs, meta.avgdl, meta.segment_docs, meta.block_size, meta.positional
-        )
-        (
-            blocks.write.mode("append")
-            .partitionBy("segment_id")
-            .parquet(os.path.join(out_dir, "segments"))
-        )
-        # lineage from the blocks FRAME (not a committed re-read): the
-        # batch-build pattern of aggregating committed files is
-        # replay-safe only under its dynamic-partition OVERWRITE — this
-        # sink APPENDS, so a foreachBatch re-execution after a crash
-        # would double-count the crashed attempt's orphan files. The
-        # frame agg re-runs only the encode over the PERSISTED tokens
-        # (the expensive docids+tokenize chain runs once per batch now).
-        sd = meta.segment_docs
-        lin = (
-            blocks.groupBy("segment_id")
-            .agg(
-                F.count_distinct("term").alias("term_count"),
-                F.sum(
-                    F.octet_length("docs_bin")
-                    + F.octet_length("tfs_bin")
-                    + F.octet_length("dls_bin")
-                    + F.octet_length("pos_bin")
-                ).alias("bytes"),
-                F.sum("sum_tf").alias("token_count"),
-            )
-            .collect()
-        )
-        by_seg = {int(r["segment_id"]): r for r in lin}
-        # per-segment doc counts for THIS batch: docIDs are dense in
-        # [high_water_doc, high_water_doc + n_new), so each segment's
-        # share is pure arithmetic (every doc counted exactly once across
-        # all lineage rows — refresh_corpus_stats sums them; zero-token
-        # docs have no blocks but still occupy ids, hence range overlap,
-        # not block stats)
-        lo, hi = high_water_doc, high_water_doc + n_new
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        rows_out = [
-            (
-                s,
-                min((s + 1) * sd, hi) - max(s * sd, lo),
-                int(by_seg[s]["term_count"]) if s in by_seg else 0,
-                int(by_seg[s]["bytes"]) if s in by_seg else 0,
-                wall_ms,
-                int(by_seg[s]["token_count"]) if s in by_seg else 0,
-            )
+    # per-segment doc counts for THIS batch: docIDs are dense in
+    # [high_water_doc, high_water_doc + n_new), so each segment's share
+    # is pure arithmetic (every doc counted exactly once across all
+    # lineage rows — refresh_corpus_stats sums them; zero-token docs have
+    # no blocks but still occupy ids, hence range overlap, not block stats)
+    sd = meta.segment_docs
+    lo, hi = high_water_doc, high_water_doc + n_new
+    _commit_lineage(
+        spark, out_dir, meta.sink_format,
+        {
+            s: min((s + 1) * sd, hi) - max(s * sd, lo)
             for s in range(lo // sd, (hi - 1) // sd + 1)
-        ]
-        (
-            spark.createDataFrame(
-                rows_out,
-                schema=(
-                    "partition_id long, doc_count long, term_count long, "
-                    "bytes long, wall_ms long, token_count long"
-                ),
-            )
-            .withColumn("commit_ts", F.current_timestamp())
-            .select(
-                "partition_id", "doc_count", "term_count", "bytes",
-                "wall_ms", "commit_ts", "token_count",
-            )
-            .write.mode("append")
-            .parquet(os.path.join(out_dir, "lineage"))
-        )
-        return high_water_doc + n_new
-    finally:
-        docs.unpersist()
-        # the two-pass docID persist (DISK_ONLY) must not outlive the
-        # micro-batch: a long-running stream would otherwise stack one
-        # persisted frame per batch until GC happens to reclaim them
-        src = getattr(assigned, "_persisted_source", None)
-        if src is not None:
-            src.unpersist()
+        },
+        stats,
+        int((time.monotonic() - t0) * 1000),
+    )
+    return hi
 
 
 def maintain_stream(

@@ -155,3 +155,22 @@ def test_serving_calls_submit_pinned_jobs(spark, index_dir):
         "percentiles": 5, "cardinality": 6, "top_hits": 6,
     }
     assert got == {name: [n, n] for name, n in want.items()}
+
+
+@pytest.mark.parametrize("source", ["frame", "docvalues"])
+def test_sort_by_field_missing_keys_sort_last(spark, index_dir, source):
+    """Keys only for the first segment's docs: the other three shards
+    receive no key at all, and their docs must still sort last rather
+    than compete with their BM25 scores (which, negated for an ascending
+    sort, would beat every real key)."""
+    keys = spark.createDataFrame(
+        [(i, 1000.0 + i) for i in range(SEG)], "doc_id long, sort_key double"
+    )
+    if source == "docvalues":
+        keys = write_docvalues(spark, index_dir, "first_seg_key", keys)
+    merged, tstats, meta = load_index(spark, index_dir)
+    got = wand_topk(
+        spark, merged, tstats, meta, _queries(spark, [("q", "common", 5)]),
+        sort_meta=keys, sort_ascending=True,
+    ).orderBy("rank").collect()
+    assert [(r["doc_id"], r["score"]) for r in got] == [(i, 1000.0 + i) for i in range(5)]

@@ -132,9 +132,9 @@ def test_searcher_suggest_and_complete(spark, index_dir):
 
 
 def test_close_releases_cache(spark, index_dir):
-    # assign_doc_ids' two-pass persist may already be in the cache (it is
-    # released by the ContextCleaner, not eagerly) — the contract here is
-    # that a Searcher session adds NOTHING across open/search/close
+    # earlier tests of the session may have left frames in the cache —
+    # the contract here is that a Searcher session adds NOTHING across
+    # open/search/close
     before = _n_cached(spark)
     s = Searcher(spark, index_dir)
     s.search(queries_df(spark)).count()
